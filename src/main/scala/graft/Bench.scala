@@ -81,7 +81,8 @@ object Bench {
         name -> (elapsed, ok)
       }
     }
-    def s3(v: Double): String = f"$v%.3f"
+    // Locale.ROOT: a comma-decimal default locale must not break the JSON
+    def s3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     // min over SUCCESSFUL runs only (host noise inflates one run, never
     // both, so min tracks plan cost); a query with zero successful runs
     // is reported as -1 and counted in `errors`.
@@ -128,7 +129,7 @@ object Bench {
     //  * BENCH_TOTAL.json (the transport-independent copy, a FILE with
     //    no tail bound) carries the full contract line WITH the compact
     //    per-query map.
-    def s2(v: Double): String = f"$v%.2f"
+    def s2(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     val qcompact = mins
       .map { case (k, v) => "\"" + k + "\":" + s2(v) }.mkString("{", ",", "}")
     val queriesLine =
@@ -138,7 +139,7 @@ object Bench {
         s""""sf":"$sfDir","errors":$errorRuns,"queries":{},"queries_file":"BENCH_LOCAL.json"}"""
     val totalWithQueries =
       s"""{"metric":"total","value":${s3(total)},"unit":"sec",""" +
-        s""""sf":"$sfDir","errors":$errorRuns,"queries":$qcompact}"""
+        s""""sf":"$sfDir","errors":$errorRuns,"queries":$qcompact,"queries_file":"BENCH_LOCAL.json"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_TOTAL.json"),
       (totalWithQueries + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     spark.stop()

@@ -120,10 +120,12 @@ object Scd2 {
   *                               batch under a NEW version number
   * <root>/<table>/history/b<T>/  rows CLOSED by batch T; append-only
   * <root>/<table>/history/f<T>-v<N>/  fork fold (W4): full closed set
-  * <root>/<table>/_m/m<SEQ>      manifest: the committed directory set,
-  *                               written last (create-exclusive, with a
-  *                               trailing end-marker), read first
-  * <root>/blocks/segs/           commit log (append-only segments)
+  * <root>/<table>/_m/m<SEQ>      manifest (`graft.core.ManifestLog`):
+  *                               live=/history=/livefile= lines
+  * <root>/blocks/segs/s<T>-m<S>/ commit log: one segment per batch T
+  * <root>/blocks/segs/c<T>-m<S>/ commit log: fold of the whole log at T
+  * <root>/blocks/_m/m<SEQ>       manifest: the committed segment and
+  *                               fold directories, one per line
   * ```
   *
   * Why: SCD2 history is immutable except at a fork — only the live set
@@ -133,27 +135,17 @@ object Scd2 {
   * 100 TB of accumulated history. Current-state queries read `live/`
   * alone; as-of/history queries union both.
   *
-  * Atomicity: readers resolve state exclusively through the highest
-  * COMPLETE manifest; a commit writes all data directories first (never
-  * touching a directory any manifest references), then publishes one
-  * manifest file — the reference's per-block Postgres transaction
-  * (`/root/reference/src/event_handler.rs:34-35`) re-expressed for a
-  * distributed filesystem. The publish is a CREATE-EXCLUSIVE write of a
-  * never-reused name `m<seq>` whose last line is an end-marker the
-  * reader validates: a crash mid-write leaves a file without the marker
-  * — detectably partial, skipped by readers, garbage-collected and
-  * superseded (fresh higher seq) by the replay's next commit. No step
-  * of the protocol renames anything, so commit atomicity does NOT
-  * depend on the filesystem's rename semantics — it holds on local
-  * disk, HDFS, ABFS, and rename-as-copy stores like S3A alike. A crash
-  * at ANY point leaves either the old manifest current (old state fully
-  * intact, the streaming engine replays the batch) or the new one
-  * (commit complete); unreferenced directories from crashed attempts
-  * are garbage-collected by the next commit. Writers are single-process
-  * per table (Structured Streaming's one-active-batch guarantee), which
-  * is what makes the fresh-seq choice race-free; the production
-  * multi-writer swap-in is Delta/Iceberg MERGE, which keeps this exact
-  * layout idea as partition `live = end_block_num = MAX`.
+  * Atomicity: readers resolve state exclusively through the newest
+  * complete manifest of a `ManifestLog`, whose create-exclusive,
+  * end-marker-validated publish is the commit (no rename anywhere). A
+  * commit writes all data directories first, never touching a directory
+  * any committed manifest references, then publishes. A crash at ANY
+  * point leaves either the old manifest current (old state fully intact,
+  * the streaming engine replays the batch) or the new one (commit
+  * complete); unreferenced directories from crashed attempts are
+  * garbage-collected by the next commit. The production multi-writer
+  * swap-in is Delta/Iceberg MERGE, which keeps this exact layout idea as
+  * partition `live = end_block_num = MAX`.
   *
   * Reader contract: `live()`/`table()` resolve concrete directory paths
   * at call time and return lazy DataFrames; commits retain the
@@ -166,8 +158,8 @@ object Scd2 {
   */
 final class Scd2Store(spark: SparkSession, root: String,
                       retainGenerations: Int = 1) extends SdsStore {
-  import java.nio.charset.StandardCharsets.UTF_8
   import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+  import graft.core.ManifestLog
 
   private val fs: FileSystem =
     new HPath(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -178,7 +170,11 @@ final class Scd2Store(spark: SparkSession, root: String,
 
   private def dir(name: String): HPath = new HPath(root, name)
   private def historyDir(name: String): HPath = new HPath(dir(name), "history")
-  private def manifestDir(name: String): HPath = new HPath(dir(name), "_m")
+
+  /** The manifest log of a table or of the blocks log. */
+  private def log(name: String): ManifestLog =
+    new ManifestLog(fs, new HPath(dir(name), "_m"), name, retainGenerations,
+      l => failpoint(l))
 
   private def empty(name: String): DataFrame = {
     val schema = if (name == "blocks") Schemas.blocksTable else Schemas.tables(name)._1
@@ -198,7 +194,7 @@ final class Scd2Store(spark: SparkSession, root: String,
     found
   }
 
-  // ---- manifest: the single source of committed truth ------------------
+  // ---- table manifests -------------------------------------------------
 
   /** `liveFiles`: per-file zone map of the current live version —
     * (fileName, lo, hi) over the `_k` key-bucket column — carried in
@@ -207,120 +203,50 @@ final class Scd2Store(spark: SparkSession, root: String,
     * manifests written before the zone maps existed (or for tables
     * without a registered scope key): readers degrade to the full live
     * read, never a wrong answer. */
-  private case class Manifest(seq: Long, liveVersion: Int, history: Seq[String],
-                              liveFiles: Seq[(String, Int, Int)] = Seq.empty)
+  private case class Manifest(liveVersion: Int, history: Seq[String],
+                              liveFiles: Seq[(String, Int, Int)])
 
-  private def manifestSeq(p: HPath): Option[Long] = {
-    val n = p.getName
-    if (n.startsWith("m")) n.drop(1).toLongOption else None
-  }
-
-  /** Manifest files by seq, newest first — includes partials. */
-  private def manifestEntries(name: String): Seq[(Long, HPath)] =
-    listDir(manifestDir(name))
-      .flatMap(p => manifestSeq(p).map(s => (s, p)))
-      .sortBy(-_._1)
-
-  /** Parse one manifest file. `None` = the end-marker is missing, i.e. a
-    * crashed partial publish — callers skip it and fall back to the next
-    * lower seq. A file WITH the marker but no live= line is genuine
-    * corruption and fails loudly. Throws `FileNotFoundException` when the
-    * file vanished between list and open (a reader racing a concurrent
-    * commit's manifest GC) — `latestManifest` turns that into a re-list,
-    * never a crash. */
-  private def readManifest(seq: Long, p: HPath): Option[Manifest] = {
-    failpoint(s"pre-read-manifest:m$seq")
-    val in = fs.open(p)
-    val lines =
-      try new String(in.readAllBytes(), UTF_8).linesIterator.toSeq
-      finally in.close()
-    if (!lines.lastOption.contains(Scd2Store.EndMarker)) None
-    else {
-      val liveV = lines.collectFirst { case l if l.startsWith("live=") =>
-        l.stripPrefix("live=").toInt }.getOrElse(throw new java.io.IOException(
-        s"corrupt manifest $p: no live= line (content: ${lines.mkString("\\n").take(200)})"))
-      val liveFiles = lines.collect { case l if l.startsWith("livefile=") =>
-        l.stripPrefix("livefile=").split(",", 3) match {
-          case Array(n, lo, hi) => (n, lo.toInt, hi.toInt)
-          case _ => throw new java.io.IOException(
-            s"corrupt manifest $p: malformed livefile line ($l)")
-        }
+  /** Parse a complete table manifest. A complete one without a live=
+    * line is genuine corruption and fails loudly. */
+  private def parse(name: String, g: ManifestLog.Generation): Manifest = {
+    def corrupt(why: String) = new java.io.IOException(
+      s"corrupt manifest $name/_m/m${g.seq}: $why")
+    val liveV = g.lines.collectFirst { case l if l.startsWith("live=") =>
+      l.stripPrefix("live=").toInt }.getOrElse(throw corrupt(
+      s"no live= line (content: ${g.lines.mkString("\\n").take(200)})"))
+    val liveFiles = g.lines.collect { case l if l.startsWith("livefile=") =>
+      l.stripPrefix("livefile=").split(",", 3) match {
+        case Array(n, lo, hi) => (n, lo.toInt, hi.toInt)
+        case _ => throw corrupt(s"malformed livefile line ($l)")
       }
-      Some(Manifest(seq, liveV,
-        lines.collect { case l if l.startsWith("history=") =>
-          l.stripPrefix("history=") },
-        liveFiles))
     }
+    Manifest(liveV,
+      g.lines.collect { case l if l.startsWith("history=") => l.stripPrefix("history=") },
+      liveFiles)
   }
 
-  /** Newest complete manifest. A reader can race a concurrent commit's
-    * manifest GC: a listed file may vanish between list and open (it was
-    * superseded and collected — meaning a NEWER manifest now exists that
-    * the stale listing doesn't contain). A vanished file therefore
-    * triggers a RE-LIST, not a fall-back to a lower seq: the lower seqs
-    * were collected even earlier, and exhausting them would return None
-    * — an empty table, the wrong-answer shape. Bounded: each retry
-    * requires another concurrent commit to have landed mid-read, and a
-    * pass that hits no vanished file is terminal. */
-  private def latestManifest(name: String): Option[Manifest] = {
-    var attempts = 0
-    while (attempts < 8) {
-      var raced = false
-      val found = manifestEntries(name).iterator.flatMap { case (s, p) =>
-        try readManifest(s, p)
-        catch { case _: java.io.FileNotFoundException => raced = true; None }
-      }.nextOption()
-      if (found.isDefined || !raced) return found
-      attempts += 1
-    }
-    throw new java.io.IOException(
-      s"manifest listing for $name kept vanishing across 8 re-lists — " +
-        "GC racing faster than reads can complete; raise retainGenerations")
-  }
+  private def latestManifest(name: String): Option[Manifest] =
+    log(name).latest().map(parse(name, _))
 
-  /** Publish a new committed state: CREATE-EXCLUSIVE write of manifest
-    * m<seq> (seq = 1 + the highest seq ever seen, complete or partial,
-    * so the name is never reused) ending in the end-marker line, then
-    * garbage-collect every directory not referenced by the new or the
+  /** Publish a new committed state, then garbage-collect every live and
+    * history directory not referenced by the new or the
     * `retainGenerations` previous complete manifests (leftovers of
-    * crashed attempts and superseded generations). The close of the
-    * exclusive write IS the commit — no rename, so atomicity holds on
-    * stores that emulate rename as copy+delete (S3A). Retention gives
-    * lazy readers that resolved paths before this commit
-    * `retainGenerations` full batches to materialize (see the reader
-    * contract in the class doc). */
+    * crashed attempts and superseded generations). Retention gives lazy
+    * readers that resolved paths before this commit `retainGenerations`
+    * full batches to materialize (see the reader contract in the class
+    * doc). */
   private def commit(name: String, liveVersion: Int, history: Seq[String],
-                     liveFiles: Seq[(String, Int, Int)] = Seq.empty): Unit = {
-    fs.mkdirs(manifestDir(name))
-    val entries = manifestEntries(name)
-    val seq = entries.headOption.fold(0L)(_._1) + 1
-    val retained = entries
-      .flatMap { case (s, p) =>
-        try readManifest(s, p)
-        catch { case _: java.io.FileNotFoundException => None } // racing GC: skip
-      }.take(retainGenerations)
-    val content =
-      ((s"live=$liveVersion" +: history.sorted.map("history=" + _)) ++
-        liveFiles.sortBy(_._1).map { case (n, lo, hi) => s"livefile=$n,$lo,$hi" }
-        :+ Scd2Store.EndMarker).mkString("\n")
-    val dest = new HPath(manifestDir(name), s"m$seq")
-    failpoint(s"$name:pre-publish") // the window between choosing a seq
-    // and publishing it — where a second writer's commit can land
-    val out = fs.create(dest, false) // exclusive: fails if the name exists
-    try out.write(content.getBytes(UTF_8)) finally out.close()
-    failpoint(s"$name:post-commit")
-    // GC below this line only removes UNREFERENCED paths — a crash here
-    // leaves harmless garbage, cleaned by the next commit.
-    val keepSeq = Set(seq) ++ retained.map(_.seq)
-    val keepLive = Set(s"v$liveVersion") ++ retained.map(m => s"v${m.liveVersion}")
-    val keepHist = history.toSet ++ retained.flatMap(_.history)
+                     liveFiles: Seq[(String, Int, Int)]): Unit = {
+    val kept = log(name).publish(
+      (s"live=$liveVersion" +: history.sorted.map("history=" + _)) ++
+        liveFiles.sortBy(_._1).map { case (n, lo, hi) => s"livefile=$n,$lo,$hi" })
+      .map(parse(name, _))
+    val keepLive = kept.map(m => s"v${m.liveVersion}").toSet
+    val keepHist = kept.flatMap(_.history).toSet
     listDir(new HPath(dir(name), "live"))
       .filterNot(p => keepLive.contains(p.getName)).foreach(deleteRecursively)
     listDir(historyDir(name))
       .filterNot(p => keepHist.contains(p.getName)).foreach(deleteRecursively)
-    listDir(manifestDir(name))
-      .filter(p => manifestSeq(p).forall(s => !keepSeq.contains(s)))
-      .foreach(p => fs.delete(p, false))
   }
 
   private def liveOf(name: String, m: Option[Manifest]): DataFrame =
@@ -419,98 +345,81 @@ final class Scd2Store(spark: SparkSession, root: String,
     else liveOf(name, m).unionByName(spark.read.parquet(hist: _*))
   }
 
-  // ---- blocks commit log: append-only segment layout -------------------
+  // ---- blocks commit log: manifest-committed segments ------------------
   //
-  // <root>/blocks/segs/s<T>/  one segment per batch (tag T = batch max
-  // block), never rewritten once committed; reads reconcile last-id-wins
-  // by segment tag. Why: the old versioned-rewrite layout re-wrote the
-  // whole chain every batch — O(chain) write amplification that grows
-  // forever; appending a segment is O(batch), and a rare fold (fork, or
-  // segment count past BlockCompactThreshold) keeps read fan-in bounded.
+  // One O(batch) segment per batch (tag T = batch max block), never
+  // rewritten once committed; reads reconcile last-id-wins by `_seg` = T.
+  // A rare fold (fork, or segment count past BlockCompactThreshold)
+  // replaces the whole list and keeps read fan-in bounded. Every directory
+  // name carries the suffix m<S>, S = 1 + the newest committed seq when it
+  // was written: no committed manifest can reference that name yet, so a
+  // write (and a crashed attempt's replay over its residue) never touches
+  // a directory a reader can see.
 
   private def blockSegRoot: HPath = new HPath(dir("blocks"), "segs")
 
-  private def blockSegPaths: Seq[HPath] =
-    listDir(blockSegRoot)
-      .filter(p => !p.getName.endsWith("-staging") &&
-        fs.exists(new HPath(p, "_SUCCESS")) && hasParquet(p))
-      .sortBy(_.getName)
+  private val blockSegSchema = Schemas.blocksTable.add("_seg", "long")
 
-  /** Parse a committed fold directory name `c<tag>-a<attempt>`. */
-  private def foldAttempt(name: String): Option[(Long, Int)] =
-    if (name.startsWith("c") && !name.endsWith("-staging"))
-      name.drop(1).split("-a", 2) match {
-        case Array(t, a) =>
-          for (tl <- t.toLongOption; ai <- a.toIntOption) yield (tl, ai)
-        case _ => None
-      }
-    else None
+  /** Committed blocks-log directories and the suffix for a new one. */
+  private def blockDirs(): (Seq[String], Long) =
+    log("blocks").latest().fold((Seq.empty[String], 1L))(g => (g.lines, g.seq + 1))
+
+  /** Batch tag of a blocks-log directory `s<T>-m<S>` or `c<T>-m<S>`. */
+  private def blockTag(d: String): Long = d.drop(1).takeWhile(_ != '-').toLong
+
+  /** Publish the blocks log as `dirs` and GC unreferenced directories. */
+  private def commitBlocks(dirs: Seq[String]): Unit = {
+    val keep = log("blocks").publish(dirs).flatMap(_.lines).toSet
+    listDir(blockSegRoot).filterNot(p => keep(p.getName)).foreach(deleteRecursively)
+  }
 
   /** Reconciled commit log: last block_id per block_num wins, by segment
     * tag (D4 across batches). Distributed — nothing driver-side. */
   def blocks(): DataFrame = {
-    val segs = blockSegPaths
+    val segs = blockDirs()._1
     if (segs.isEmpty) empty("blocks")
-    else spark.read.parquet(segs.map(_.toString): _*)
+    else spark.read.schema(blockSegSchema)
+      .parquet(segs.map(d => new HPath(blockSegRoot, d).toString): _*)
       .groupBy("block_num")
       .agg(max_by(col("block_id"), col("_seg")).as("block_id"))
   }
 
-  /** W5 append: one O(batch) segment, idempotent by committed tag (replay
-    * of the last checkpointed batch skips the write). */
+  /** W5 append: one O(batch) segment, idempotent by tag — a replayed tag
+    * already in a committed segment, or at or below a committed fold's
+    * tag, adds nothing. So within one committed list every segment's tag
+    * exceeds the fold's and the `_seg` reconcile never ties. */
   def appendBlocks(batch: DataFrame, tag: Long): Unit = {
-    val target = new HPath(blockSegRoot, s"s$tag")
-    if (!fs.exists(new HPath(target, "_SUCCESS"))) {
-      deleteRecursively(target) // partial write from a crash
-      batch.withColumn("_seg", lit(tag * Scd2Store.SegRankStride))
-        .write.mode("overwrite").parquet(target.toString)
-    }
-    if (blockSegPaths.size > Scd2Store.BlockCompactThreshold)
+    val (dirs, next) = blockDirs()
+    val covered = dirs.exists(d =>
+      blockTag(d) == tag || (d.startsWith("c") && blockTag(d) >= tag))
+    val committed =
+      if (covered) dirs
+      else {
+        val seg = s"s$tag-m$next"
+        batch.withColumn("_seg", lit(tag))
+          .write.mode("overwrite").parquet(new HPath(blockSegRoot, seg).toString)
+        commitBlocks(dirs :+ seg)
+        dirs :+ seg
+      }
+    if (committed.size > Scd2Store.BlockCompactThreshold)
       compactBlocks(blocks(), tag)
   }
 
-  /** Fold the log into one segment — fork rewind (W4) or periodic
-    * compaction.
-    *
-    * Crash ordering: each fold attempt gets a UNIQUE directory name
-    * `c<tag>-a<attempt>` (attempt = max same-tag attempt on disk + 1,
-    * committed or not), so a fold write never targets — and the
-    * supersede pass never deletes — a directory any reader can
-    * currently see. The fold writes DIRECTLY to its unique directory;
-    * the write executes the read of the old segments (fold fully
-    * materialized first), and the `_SUCCESS` marker the committer
-    * writes last is what makes the fold visible to `blockSegPaths` —
-    * promotion needs no rename, so the protocol does not depend on
-    * rename atomicity (S3A-safe, matching the manifest publish). ONLY
-    * after the fold is visible are the superseded segments (including
-    * prior same-tag folds) removed. A crash at any point leaves a
-    * readable log: before `_SUCCESS` lands → an invisible partial fold
-    * (a replay starts a fresh attempt, the stale directory is ignored
-    * forever); after it, mid-delete → new fold + leftovers, which
-    * `blocks()` reconciles by max `_seg` — the new attempt's rank
-    * strictly exceeds both the same-tag plain segment and every earlier
-    * attempt, so there is never a tie. The one visible remnant —
-    * fork-orphaned block_nums absent from a rewound fold but present in
-    * a leftover HIGHER-tag segment — is healed when Structured
-    * Streaming replays the uncommitted batch and re-runs this
-    * compaction. The commit log is never empty or lost. */
+  /** Fold the log into one directory — fork rewind (W4) or periodic
+    * compaction. The write executes the read of the committed segments
+    * into a fresh directory no manifest references; the manifest publish
+    * makes it visible and supersedes everything else at once. A crash
+    * before the publish leaves the old log intact (a replay overwrites
+    * the unreferenced residue); after it, only unreferenced directories
+    * are left for the next commit to collect. The commit log is never
+    * empty or lost. */
   def compactBlocks(full: DataFrame, tag: Long): Unit = {
-    val attempt = listDir(blockSegRoot)
-      .flatMap(p => foldAttempt(p.getName))
-      .collect { case (t, a) if t == tag => a }
-      .maxOption.getOrElse(0) + 1
-    require(attempt < Scd2Store.SegRankStride,
-      s"fold attempt counter exhausted for tag $tag")
-    val fold = new HPath(blockSegRoot, s"c$tag-a$attempt")
-    // snapshot the supersede set BEFORE the fold becomes visible: it can
-    // never contain the new fold, so nothing a reader can see is deleted
-    // until the fold is committed
-    val old = blockSegPaths
+    val fold = s"c$tag-m${blockDirs()._2}"
     failpoint("compactBlocks:pre-promote")
-    full.withColumn("_seg", lit(tag * Scd2Store.SegRankStride + attempt))
-      .write.mode("overwrite").parquet(fold.toString)
+    full.withColumn("_seg", lit(tag))
+      .write.mode("overwrite").parquet(new HPath(blockSegRoot, fold).toString)
     failpoint("compactBlocks:post-promote")
-    old.foreach(deleteRecursively)
+    commitBlocks(Seq(fold))
   }
 
   /** Apply a merged batch result: newly-closed rows append to history
@@ -693,24 +602,10 @@ final class Scd2Store(spark: SparkSession, root: String,
 }
 
 object Scd2Store {
-  /** Last line of every complete manifest. A manifest file without it is
-    * a crashed partial publish: readers skip it, the next commit GCs it.
-    * The marker is what lets the publish be a plain create-exclusive
-    * write instead of an atomic rename. */
-  val EndMarker = "end"
-
   /** Segment count that triggers a blocks-log fold: high enough that the
     * amortized rewrite cost stays O(1) per batch, low enough that the
-    * read fan-in (one parquet listing per segment) stays trivial. */
+    * read fan-in stays trivial. */
   val BlockCompactThreshold = 64
-
-  /** `_seg` rank stride per block tag: plain segment s<T> ranks
-    * T·stride, fold attempt a of the same tag ranks T·stride + a — a
-    * fold strictly outranks the segment it folded AND every earlier
-    * attempt, so the `max_by(_seg)` reconcile in `blocks()` never ties
-    * during a crash-overlap window. 2^20 attempts of headroom per tag
-    * keeps ranks collision-free up to ~2^43 blocks. */
-  val SegRankStride: Long = 1L << 20
 
   /** `_k` zone-map bucket domain for live-file point-lookup pruning.
     * Wide enough that files of a many-thousand-file live set carry

@@ -1,13 +1,12 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets.UTF_8
-
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.Row
 
+import graft.core.ManifestLog
 import graft.operators.Dedup
 
 /** Incremental near-duplicate detection over a document STREAM — the
@@ -45,15 +44,12 @@ import graft.operators.Dedup
   *      changed text replaces its stale store rows, see
   *      `processBatch`).
   *
-  * Store layout — the same manifest-committed protocol as `Scd2Store`
-  * (rename-free, so commit atomicity holds on rename-as-copy stores
-  * like S3A):
+  * Store layout — committed through a `graft.core.ManifestLog` (the
+  * rename-free create-exclusive publish the SCD2 tables use, so commit
+  * atomicity holds on rename-as-copy stores like S3A):
   * {{{
   *   <store>/_m/m<SEQ>   manifest: one committed FILE per line as
-  *                       "<relpath>\t<minKey>\t<maxKey>" (the zone
-  *                       map), trailing end-marker; published by a
-  *                       CREATE-EXCLUSIVE write of a never-reused seq
-  *                       — the close IS the commit
+  *                       "<relpath>\t<minKey>\t<maxKey>" (the zone map)
   *   <store>/d<SEQ>/part-*.parquet
   *                       PROBE INDEX: immutable exploded rows (one per
   *                       doc×band), sorted + range-split by the pid
@@ -79,16 +75,15 @@ import graft.operators.Dedup
   * the 256-leaf directory layout cost ~320 new files per batch and
   * grew batch latency linearly with batch count).
   *
-  * Readers resolve the newest COMPLETE manifest (end-marker present);
-  * a crash mid-publish leaves a detectably-partial file that readers
-  * skip and the next commit supersedes and GCs. Data directories not
-  * referenced by the newest or previous manifest are GC'd at commit
-  * (one retained generation for lazy readers, as in `Scd2Store`).
-  * Batch appends add one directory each; when the committed directory
-  * count passes `CompactThreshold` the store self-compacts, keeping
-  * read fan-in bounded — same policy as the SCD2 segment log (a
-  * size-tiered policy would cut the rewrite amplification further;
-  * the fold here is rare enough that the simple policy wins on
+  * Data directories not referenced by the newest or previous manifest
+  * are GC'd at commit (one retained generation for lazy readers). A new
+  * directory is named above the newest committed seq and every
+  * directory it lists, a name no committed manifest can reference yet.
+  * Batch appends add one directory per kind; when the committed
+  * directory count passes `CompactThreshold` the store self-compacts,
+  * keeping read fan-in bounded — same policy as the SCD2 blocks log (a
+  * size-tiered policy would cut the rewrite amplification further; the
+  * fold here is rare enough that the simple policy wins on
   * auditability).
   */
 object IncrementalDedup {
@@ -113,8 +108,6 @@ object IncrementalDedup {
     * stores at toy scale). */
   private[graft] var TargetRowsPerFile: Long = 1_000_000L
 
-  private val EndMarker = "end"
-
   /** Exploded store row key — `band_idx * BucketPartitions + bh`: the
     * sort/range-split key of index files and the coordinate of their
     * manifest zone map. */
@@ -136,14 +129,20 @@ object IncrementalDedup {
   private def fsOf(spark: SparkSession, dir: String): FileSystem =
     new HPath(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def manifestDir(root: String): HPath = new HPath(root, "_m")
+  /** Test seam: the store log's hook, called with the commit-point
+    * labels `dedup:pre-publish`, `dedup:post-commit` and
+    * `pre-read-manifest:m<seq>`. */
+  private[streaming] var hook: String => Unit = _ => ()
 
-  /** Numbered children `<prefix><id>` of `p`, any order. */
-  private def listIds(fs: FileSystem, p: HPath, prefix: String): Seq[(Long, HPath)] =
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith(prefix))
-      .flatMap(q => q.getName.drop(prefix.length).toLongOption.map(_ -> q))
+  private def log(spark: SparkSession, root: String): ManifestLog =
+    new ManifestLog(fsOf(spark, root), new HPath(root, "_m"), "dedup", 1, l => hook(l))
+
+  /** Committed data directories `d<id>`/`r<id>` and crash residue. */
+  private def dataDirs(fs: FileSystem, root: String): Seq[HPath] =
+    if (!fs.exists(new HPath(root))) Seq.empty
+    else fs.listStatus(new HPath(root)).toSeq.map(_.getPath).filter(p =>
+      (p.getName.startsWith("d") || p.getName.startsWith("r")) &&
+        p.getName.drop(1).toLongOption.isDefined)
 
   /** One committed data file: ROOT-RELATIVE path plus its zone map —
     * the [lo, hi] range of the file's pruning key (pid for `d` index
@@ -152,10 +151,6 @@ object IncrementalDedup {
   private case class FileEntry(path: String, lo: Int, hi: Int) {
     def dir: String = path.takeWhile(_ != '/')
     def line: String = s"$path\t$lo\t$hi"
-  }
-
-  private case class StoreState(seq: Long, files: Seq[FileEntry]) {
-    def dirs: Seq[String] = files.map(_.dir).distinct
   }
 
   /** Parse one manifest line, FAILING LOUDLY on malformed input: inside
@@ -173,104 +168,37 @@ object IncrementalDedup {
       s"corrupt line in complete (end-marker-present) dedup-store manifest: " +
         s"'$line' is not path\\tlo\\thi"))
 
-  /** Test-only read-race injection: invoked with the manifest path just
-    * before open; a hook that deletes the file simulates a reader racing
-    * a concurrent commit's manifest GC. */
-  private[streaming] var readpoint: HPath => Unit = _ => ()
-
-  /** Newest COMPLETE manifest (end-marker validated); partial files from
-    * crashed publishes are skipped. A file that VANISHED between list and
-    * open (reader racing a commit's manifest GC — a newer manifest exists
-    * that the stale listing doesn't contain) triggers a re-list, exactly
-    * as in `Scd2Store.latestManifest`: falling back to a lower seq would
-    * exhaust to None (an empty store — silently re-accepting every dup). */
-  private def latestState(spark: SparkSession, root: String): Option[StoreState] = {
-    val fs = fsOf(spark, root)
-    var attempts = 0
-    while (attempts < 8) {
-      var raced = false
-      val found = listIds(fs, manifestDir(root), "m").sortBy(-_._1).iterator.flatMap {
-        case (seq, p) =>
-          try {
-            readpoint(p)
-            val in = fs.open(p)
-            val lines =
-              try new String(in.readAllBytes(), UTF_8).linesIterator.toSeq
-              finally in.close()
-            if (lines.lastOption.contains(EndMarker))
-              Some(StoreState(seq,
-                lines.dropRight(1).filter(_.nonEmpty).map(parseEntry)))
-            else None
-          } catch {
-            case _: java.io.FileNotFoundException => raced = true; None
-          }
-      }.nextOption()
-      if (found.isDefined || !raced) return found
-      attempts += 1
+  /** The newest committed generation: the id for new data directories
+    * and its file entries. The id exceeds the seq and every directory
+    * the generation references (older stores numbered directories apart
+    * from seqs), so no committed manifest references that name yet. */
+  private def latest(spark: SparkSession, root: String): (Long, Seq[FileEntry]) =
+    log(spark, root).latest().fold((1L, Seq.empty[FileEntry])) { g =>
+      val files = g.lines.map(parseEntry)
+      ((g.seq +: files.map(_.dir.drop(1).toLong)).max + 1, files)
     }
-    throw new java.io.IOException(
-      s"manifest listing for $root kept vanishing across 8 re-lists — " +
-        "GC racing faster than reads can complete")
-  }
-
-  /** Fresh id strictly above every data dir and manifest ever written
-    * (complete or partial), so names are never reused — what makes
-    * create-exclusive publishes and crash-residue GC race-free under
-    * the single-writer-per-store contract (Structured Streaming's
-    * one-active-batch guarantee). */
-  private def nextId(fs: FileSystem, root: String): Long =
-    ((listIds(fs, new HPath(root), "d") ++ listIds(fs, new HPath(root), "r") ++
-      listIds(fs, manifestDir(root), "m"))
-      .map(_._1) :+ 0L).max + 1
 
   /** Publish `files` (with their zone maps) as the committed store
-    * contents: create-exclusive manifest write, then GC of every data
-    * DIRECTORY the new or PREVIOUS manifest doesn't reference. No
-    * renames anywhere. */
-  /** Test seam: runs between seq resolution and the exclusive manifest
-    * create — the window where a concurrent writer's commit can land
-    * (mirrors `Scd2Store.failpoint`). */
-  private[streaming] var prePublish: () => Unit = () => ()
-
-  private def commit(spark: SparkSession, root: String, files: Seq[FileEntry]): Unit = {
+    * contents, then GC every data DIRECTORY the new or previous
+    * generation doesn't reference — a crash before the GC leaves only
+    * harmless garbage for the next commit. Directories are immutable
+    * once committed. Returns `files`. */
+  private def commit(spark: SparkSession, root: String,
+                     files: Seq[FileEntry]): Seq[FileEntry] = {
+    val keep = log(spark, root).publish(files.map(_.line))
+      .flatMap(_.lines.map(parseEntry(_).dir)).toSet
     val fs = fsOf(spark, root)
-    fs.mkdirs(manifestDir(root))
-    val prev = latestState(spark, root)
-    // Manifest seq from the MANIFEST listing alone (highest ever seen,
-    // complete or partial, +1 — Scd2Store's rule), NOT the shared
-    // dir/manifest counter: two concurrent writers must resolve the
-    // SAME next seq so the second create-exclusive write fails loudly.
-    // Under the shared counter each writer's fresh data dirs pushed its
-    // manifest seq past the other's and the older commit was silently
-    // superseded — a lost update, not a conflict error.
-    val seq = (listIds(fs, manifestDir(root), "m").map(_._1) :+ 0L).max + 1
-    val dest = new HPath(manifestDir(root), s"m$seq")
-    prePublish()
-    val out = fs.create(dest, false) // exclusive: fails if the name exists
-    try out.write((files.map(_.line) :+ EndMarker).mkString("\n").getBytes(UTF_8))
-    finally out.close()
-    // GC below only removes UNREFERENCED paths — a crash here leaves
-    // harmless garbage, cleaned by the next commit. Granularity is the
-    // d<SEQ>/r<SEQ> directory: directories are immutable once committed.
-    val keepDirs = files.map(_.dir).toSet ++
-      prev.fold(Set.empty[String])(_.dirs.toSet)
-    (listIds(fs, new HPath(root), "d") ++ listIds(fs, new HPath(root), "r"))
-      .map(_._2)
-      .filterNot(p => keepDirs.contains(p.getName))
-      .foreach(p => fs.delete(p, true))
-    val keepM = Set(seq) ++ prev.map(_.seq)
-    listIds(fs, manifestDir(root), "m")
-      .filterNot { case (s, _) => keepM.contains(s) }
-      .foreach { case (_, p) => fs.delete(p, false) }
+    dataDirs(fs, root).filterNot(p => keep(p.getName)).foreach(fs.delete(_, true))
+    files
   }
 
   /** Committed file entries. */
   private def committedFiles(spark: SparkSession, root: String): Seq[FileEntry] =
-    latestState(spark, root).fold(Seq.empty[FileEntry])(_.files)
+    latest(spark, root)._2
 
   /** Committed directory names, for maintenance and tests. */
   private[streaming] def committedDirs(spark: SparkSession, root: String): Seq[String] =
-    latestState(spark, root).fold(Seq.empty[String])(_.dirs)
+    committedFiles(spark, root).map(_.dir).distinct
 
   /** Read a set of committed files as ONE scan — plain paths, uniform
     * schema, NO filesystem listing anywhere on the read path: the
@@ -286,24 +214,24 @@ object IncrementalDedup {
       files.map(f => new HPath(storeDir, f.path).toString): _*).drop("_k"))
   }
 
-  private def readDirs(spark: SparkSession, storeDir: String,
+  /** The `prefix` kind (`d` index, `r` registry) of a committed file set. */
+  private def readKind(spark: SparkSession, storeDir: String, files: Seq[FileEntry],
                        prefix: String): Option[DataFrame] =
-    readFiles(spark, storeDir,
-      committedFiles(spark, storeDir).filter(_.path.startsWith(prefix)))
+    readFiles(spark, storeDir, files.filter(_.path.startsWith(prefix)))
 
   /** The committed DOC REGISTRY as one DataFrame (None when empty): one
     * row per doc (doc_id, mh0..mh{k-1}, dh) — the per-doc signature
     * view. The band columns are pure functions of the mh columns, so
     * equality on mh alone is exactly signature equality. */
   private[graft] def storeSigs(spark: SparkSession, storeDir: String): Option[DataFrame] =
-    readDirs(spark, storeDir, "r")
+    readKind(spark, storeDir, committedFiles(spark, storeDir), "r")
 
   /** The committed PROBE INDEX as one DataFrame (None when empty):
     * exploded rows (doc_id, mh0..mh{k-1}, bucket, band_idx, bh) with
     * band_idx/bh recovered from the directory layout as partition
     * columns. */
   private[graft] def storeIndex(spark: SparkSession, storeDir: String): Option[DataFrame] =
-    readDirs(spark, storeDir, "d")
+    readKind(spark, storeDir, committedFiles(spark, storeDir), "d")
 
   /** The index read a probe batch actually performs: only the
     * (band_idx, bh) partition directories in `pids` — a filter on
@@ -381,17 +309,18 @@ object IncrementalDedup {
     * WRITE time so the read path never lists or probes anything. The
     * directory is invisible (unreferenced) until a manifest commit
     * includes its files; residue from crashed attempts is GC'd later. */
-  private def writeSorted(spark: SparkSession, root: String, prefix: String,
+  private def writeSorted(spark: SparkSession, root: String, name: String,
                           df: DataFrame, key: org.apache.spark.sql.Column,
                           tiebreak: String,
                           knownRows: Option[Long] = None): Seq[FileEntry] = {
     val fs = fsOf(spark, root)
-    val name = s"$prefix${nextId(fs, root)}"
     // sizing: callers that already know the exact row count (the batch
     // append derives it from the bounded touched-partition histograms)
     // pass it in, making this write a SINGLE data pass; otherwise one
-    // sizing count runs first (stale rewrite / compaction, whose inputs
-    // are localCheckpoint'd so the count reads pinned blocks)
+    // sizing count runs first. Stale-rewrite inputs are lazy: the count
+    // and the write re-read the old store, which is safe only because
+    // both run before `commit` GCs the old directories. Only compaction
+    // pins its inputs.
     val rows = knownRows.getOrElse(df.count())
     val nFiles = math.max(1L, (rows + TargetRowsPerFile - 1) / TargetRowsPerFile).toInt
     val destPath = new HPath(root, name)
@@ -422,14 +351,14 @@ object IncrementalDedup {
   }
 
   /** Index write: exploded rows range-split by pid, bucket tiebreak. */
-  private def writeIndexDir(spark: SparkSession, root: String, df: DataFrame,
+  private def writeIndexDir(spark: SparkSession, root: String, id: Long, df: DataFrame,
                             knownRows: Option[Long] = None): Seq[FileEntry] =
-    writeSorted(spark, root, "d", df, pidCol, "bucket", knownRows)
+    writeSorted(spark, root, s"d$id", df, pidCol, "bucket", knownRows)
 
   /** Registry write: per-doc rows range-split by dh, doc_id tiebreak. */
-  private def writeRegistryDir(spark: SparkSession, root: String, df: DataFrame,
+  private def writeRegistryDir(spark: SparkSession, root: String, id: Long, df: DataFrame,
                                knownRows: Option[Long] = None): Seq[FileEntry] =
-    writeSorted(spark, root, "r", df, col("dh"), "doc_id", knownRows)
+    writeSorted(spark, root, s"r$id", df, col("dh"), "doc_id", knownRows)
 
   /** Process one micro-batch of (doc_id, text): emit duplicate verdicts
     * (doc_id, dup_of, est_jaccard) against the store and earlier batch
@@ -584,7 +513,8 @@ object IncrementalDedup {
     // write): their lineage reads only the persisted batch frames plus
     // the checkpointed flags, never a store directory, so the commit's
     // GC cannot invalidate them.
-    Prof("q94 maintain+commit") {
+    val committed = Prof("q94 maintain+commit") {
+      val (id, files) = latest(spark, storeDir)
       if (staleCnt > 0) {
         // stale rewrite: the one full-store pass, taken only when a
         // doc actually changed text (rare); both kinds fold to one
@@ -597,15 +527,15 @@ object IncrementalDedup {
         // entire store.
         val exactIds = flags.filter(col("is_exact")).select("doc_id")
         val staleIds = flags.filter(!col("is_exact")).select("doc_id")
-        val newIdx = storeIndex(spark, storeDir).get
+        val newIdx = readKind(spark, storeDir, files, "d").get
           .join(staleIds, Seq("doc_id"), "left_anti")
           .unionByName(xRows.join(exactIds, Seq("doc_id"), "left_anti"))
-        val newReg = storeSigs(spark, storeDir).get
+        val newReg = readKind(spark, storeDir, files, "r").get
           .join(staleIds, Seq("doc_id"), "left_anti")
           .unionByName(batchReg.join(exactIds, Seq("doc_id"), "left_anti"))
         commit(spark, storeDir,
-          writeIndexDir(spark, storeDir, newIdx) ++
-            writeRegistryDir(spark, storeDir, newReg))
+          writeIndexDir(spark, storeDir, id, newIdx) ++
+            writeRegistryDir(spark, storeDir, id, newReg))
       } else if (regTotal > exactCnt) {
         // fresh-only append (the common case): row counts are exact
         // from the touched histograms, so each write is a single pass
@@ -618,19 +548,19 @@ object IncrementalDedup {
             (xRows.join(exactIds, Seq("doc_id"), "left_anti"),
               batchReg.join(exactIds, Seq("doc_id"), "left_anti"))
           }
-        val added = writeIndexDir(spark, storeDir, freshIdx,
+        val added = writeIndexDir(spark, storeDir, id, freshIdx,
           Some(xTotal - bands * exactCnt)) ++
-          writeRegistryDir(spark, storeDir, freshReg,
+          writeRegistryDir(spark, storeDir, id, freshReg,
             Some(regTotal - exactCnt))
-        commit(spark, storeDir, committedFiles(spark, storeDir) ++ added)
-      }
+        commit(spark, storeDir, files ++ added)
+      } else files
       // regTotal == exactCnt: every batch doc is an identical replay
       // (or the batch is empty) — no write, no commit
     }
     batchSigs.unpersist(); xRows.unpersist(); batchReg.unpersist()
     // bound read fan-in: two directories per batch accumulate — fold
     // rarely, amortized O(1) per batch (same policy as the SCD2 log)
-    if (committedDirs(spark, storeDir).size > compactAfter)
+    if (committed.map(_.dir).distinct.size > compactAfter)
       Prof("q94 compact") { compactStore(spark, storeDir) }
     out
   }
@@ -644,14 +574,15 @@ object IncrementalDedup {
     * manifest commit publishes them; a crash leaves the old manifest
     * current and the next attempt writes fresh directories. */
   def compactStore(spark: SparkSession, storeDir: String): Unit = {
+    val (id, files) = latest(spark, storeDir)
     // localCheckpoint: the writes must not re-read the old store dirs
     // lazily AFTER the commit below GCs them
-    val idx = storeIndex(spark, storeDir).map(_.localCheckpoint(true))
-    val reg = storeSigs(spark, storeDir).map(_.localCheckpoint(true))
+    val idx = readKind(spark, storeDir, files, "d").map(_.localCheckpoint(true))
+    val reg = readKind(spark, storeDir, files, "r").map(_.localCheckpoint(true))
     if (idx.isDefined || reg.isDefined)
       commit(spark, storeDir,
-        idx.toSeq.flatMap(df => writeIndexDir(spark, storeDir, df)) ++
-          reg.toSeq.flatMap(df => writeRegistryDir(spark, storeDir, df)))
+        idx.toSeq.flatMap(writeIndexDir(spark, storeDir, id, _)) ++
+          reg.toSeq.flatMap(writeRegistryDir(spark, storeDir, id, _)))
   }
 
   /** Measurement hook (spec + scale harness): the index rows a probe of

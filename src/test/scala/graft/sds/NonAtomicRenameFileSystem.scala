@@ -11,10 +11,10 @@ import org.apache.hadoop.fs.{FileStatus, FileUtil, Path, RawLocalFileSystem}
   *
   * Purpose: prove the Scd2Store commit protocol's crash matrix does not
   * depend on rename atomicity. The store's own protocol performs no
-  * renames (create-exclusive manifest publish, `_SUCCESS`-gated fold
-  * visibility); the renames that remain are Hadoop's committer renaming
-  * task output inside not-yet-visible directories, where non-atomicity
-  * is harmless. Running the crash-injection tests over this scheme
+  * renames: every table and the blocks log become visible only through
+  * a create-exclusive `ManifestLog` publish. The renames that remain are
+  * Hadoop's committer renaming task output inside directories no
+  * manifest references yet, where non-atomicity is harmless. Running the crash-injection tests over this scheme
   * exercises exactly that claim.
   */
 class NonAtomicRenameFileSystem extends RawLocalFileSystem {

@@ -180,7 +180,8 @@ class PipelineSpec extends SparkSpec {
     val b2 = batch(4, "b4", Seq(Change(agentAddress(PublicKey), "SET", container(agentJson(name = "v2")))))
     val expected = Set(("v1", 1L, 4L), ("v2", 4L, MaxBlockNum))
 
-    for (label <- Seq("applyMerged:agents:pre-commit", "agents:post-commit")) {
+    for (label <- Seq("applyMerged:agents:pre-commit", "agents:post-commit",
+        "blocks:pre-publish", "blocks:post-commit")) {
       val root = tempDir("sds-crash")
       val s1 = new Scd2Store(spark, root)
       apply1(s1, b1)
@@ -420,7 +421,8 @@ class PipelineSpec extends SparkSpec {
     // matrix must be unaffected by their lost atomicity
 
     // normal-batch commit points: crash while applying b2 after b1
-    for (label <- Seq("applyMerged:agents:pre-commit", "agents:post-commit")) {
+    for (label <- Seq("applyMerged:agents:pre-commit", "agents:post-commit",
+        "blocks:pre-publish", "blocks:post-commit")) {
       val root = "nonatomic://" + tempDir("sds-nonatomic")
       val s1 = new Scd2Store(spark, root)
       apply1(s1, b1)
@@ -435,7 +437,8 @@ class PipelineSpec extends SparkSpec {
 
     // fork commit points: crash while applying the fork after b1,b2
     for (label <- Seq("compactTo:agents:pre-commit",
-        "compactBlocks:pre-promote", "compactBlocks:post-promote")) {
+        "compactBlocks:pre-promote", "compactBlocks:post-promote",
+        "blocks:pre-publish", "blocks:post-commit")) {
       val root = "nonatomic://" + tempDir("sds-nonatomic")
       val s1 = new Scd2Store(spark, root)
       apply1(s1, b1, b2)

@@ -40,8 +40,8 @@ class IncrementalDedupSpec extends SparkSpec {
     val store = tempDir("inc-dedup-conflict") + "/sigs"
     IncrementalDedup.processBatch(docsDf(1L -> base), store)
     var raced = false
-    IncrementalDedup.prePublish = () =>
-      if (!raced) {
+    IncrementalDedup.hook = l =>
+      if (l == "dedup:pre-publish" && !raced) {
         raced = true
         // B's whole batch commits inside A's publish window (A has
         // chosen its seq but not yet created the manifest)
@@ -54,7 +54,7 @@ class IncrementalDedupSpec extends SparkSpec {
       assert(raced)
       assert(ex.toString.toLowerCase.contains("exist"),
         s"loser must fail on the exclusive create, got: $ex")
-    } finally IncrementalDedup.prePublish = () => ()
+    } finally IncrementalDedup.hook = _ => ()
     // a fresh reader sees exactly B's generation: doc 2 never became
     // visible, doc 3 did, and the store is fully consistent
     val ids = storeDf(store).select("doc_id").collect().map(_.getLong(0)).toSet
@@ -224,8 +224,8 @@ class IncrementalDedupSpec extends SparkSpec {
     def seqs() = mdir.list().filter(_.startsWith("m")).map(_.drop(1).toLong).sorted
     val maxSeq = seqs().max
     var fired = false
-    IncrementalDedup.readpoint = p =>
-      if (p.getName == s"m$maxSeq" && !fired) {
+    IncrementalDedup.hook = l =>
+      if (l == s"pre-read-manifest:m$maxSeq" && !fired) {
         fired = true
         // simulate a concurrent commit's GC landing between list and
         // open: newest content re-published at a fresh seq, the listed
@@ -240,7 +240,7 @@ class IncrementalDedupSpec extends SparkSpec {
       val docs = storeDf(store).select("doc_id").collect().map(_.getLong(0)).toSet
       assert(fired)
       assert(docs === Set(1L, 2L), "re-list must find the re-published manifest")
-    } finally IncrementalDedup.readpoint = _ => ()
+    } finally IncrementalDedup.hook = _ => ()
   }
 
   test("streaming path: foreachBatch over MemoryStream produces the same verdicts") {
