@@ -113,22 +113,15 @@ object Bench {
         s""""queries":${qmap(mins)},"runs":[${runs.map(r => qmap(r.map { case (n, (t, _)) => n -> t })).mkString(",")}]}"""
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
       (detail + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // The driver parses a bounded TAIL of the process output. Per-query
-    // visibility (round-14 verdict item: PERF per_query/scaling were
-    // empty) is restored in two tail-safe pieces:
-    //  * a COMPACT per-query line (2-decimal values, ~6 KB for 221
-    //    queries) printed immediately BEFORE the total line — if the
-    //    tail window is smaller than the map, only this line is cut,
-    //    never the total;
-    //  * the total line itself stays SHORT and LAST (a 73-query map
-    //    inside it overflowed the tail in rounds 3-5 and broke total
-    //    parsing — that failure mode must stay impossible), printed
-    //    AFTER all Spark work so nothing floods past it, to BOTH stdout
-    //    and stderr (build.sbt's StdoutOutput strategy keeps sbt from
-    //    prefixing either — the r04-r07 parse failure);
-    //  * BENCH_TOTAL.json (the transport-independent copy, a FILE with
-    //    no tail bound) carries the full contract line WITH the compact
-    //    per-query map.
+    // The driver parses a bounded TAIL of the process output. The total
+    // line carries the COMPACT per-query map (2-decimal values, ~6 KB
+    // for 221 queries — it fits the tail window) and is the one contract
+    // line: printed LAST, after all Spark work so nothing floods past
+    // it, to BOTH stdout and stderr (build.sbt's StdoutOutput strategy
+    // keeps sbt from prefixing either — the r04-r07 parse failure), and
+    // written verbatim to BENCH_TOTAL.json (the transport-independent
+    // copy, a FILE with no tail bound). The same map is printed once
+    // more on its own line just before it as a backstop.
     def s2(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     val qcompact = mins
       .map { case (k, v) => "\"" + k + "\":" + s2(v) }.mkString("{", ",", "}")
@@ -136,12 +129,9 @@ object Bench {
       s"""{"metric":"queries","unit":"sec","sf":"$sfDir","queries":$qcompact}"""
     val totalLine =
       s"""{"metric":"total","value":${s3(total)},"unit":"sec",""" +
-        s""""sf":"$sfDir","errors":$errorRuns,"queries":{},"queries_file":"BENCH_LOCAL.json"}"""
-    val totalWithQueries =
-      s"""{"metric":"total","value":${s3(total)},"unit":"sec",""" +
         s""""sf":"$sfDir","errors":$errorRuns,"queries":$qcompact,"queries_file":"BENCH_LOCAL.json"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_TOTAL.json"),
-      (totalWithQueries + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      (totalLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     spark.stop()
     println(queriesLine)
     println(totalLine)

@@ -140,40 +140,25 @@ object Curation {
     (w, acc)
   }
 
-  /** Per-session memo of the trained artifacts that several contract
+  /** Session memos of the trained artifacts that several contract
     * queries share: the classifier weights (q104/q111/q177) and the BPE
     * vocabulary (q108/q109/q111/q173). Both are DETERMINISTIC pure
     * functions of the corpus (engine-exact training is the whole point
     * of their oracles), so the first query trains and every later one
-    * reuses — the same memoization pattern as the q94/q98 signature
-    * spill. Weights are 4 driver doubles (in-memory map, immune to the
-    * bench's RDD unpersist sweeps); the vocab frame spills to a
-    * per-application tmp parquet for the same reason the signatures do. */
-  private val weightsCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Array[Double]]
-
+    * reuses. Weights are 4 driver doubles (no spill); the vocab frame
+    * spills to parquet next to its driver-side merge list. */
   private def trainWeightsCached(s: SparkSession, dir: String,
                                  f: DataFrame): Array[Double] =
-    if (graft.core.SessionSpill.noMemo) trainWeights(f)
-    else weightsCache.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir), trainWeights(f))
-
-  private val bpeCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (String, Seq[(Int, String, String, String, Long)])]
+    graft.core.SessionSpill.memo(s, "graft_clf_weights", dir)(_ => trainWeights(f))
 
   private def trainBpeCached(s: SparkSession, dir: String)
       : (DataFrame, Seq[(Int, String, String, String, Long)]) = {
-    if (graft.core.SessionSpill.noMemo) return trainBpe(s, dir)
-    val (path, merges) = bpeCache.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir), {
-        val (v, m) = trainBpe(s, dir)
-        val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-        val root = new org.apache.hadoop.fs.Path(
-          graft.core.SessionSpill.root(s, "graft_bpe"), safe)
-        v.write.mode("overwrite").parquet(root.toString)
-        v.unpersist()
-        (root.toString, m)
-      })
+    val (path, merges) = graft.core.SessionSpill.memo(s, "graft_bpe", dir) { p =>
+      val (v, m) = trainBpe(s, dir)
+      v.write.mode("overwrite").parquet(p.toString)
+      v.unpersist()
+      (p.toString, m)
+    }
     (s.read.parquet(path), merges)
   }
 

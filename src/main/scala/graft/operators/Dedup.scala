@@ -95,34 +95,12 @@ object Dedup {
           " i -> md5(array_join(slice(ws, i, 16), ' ')))")))
       .select(col("doc_id"), (col("pos") + 1).as("i"), col("col").as("h"))
 
-  /** Session-spilled copy of [[win16Of]] over the fixture corpus — the
-    * same memo discipline as the LSH/setsim/co-purchase artifacts
-    * (BASELINE.md; `-Dgraft.nomemo=1` disables): q184 and q187 both
-    * start from this exact frame and each previously re-ran the
-    * normalize→split→window-hash explode. Parquet, not a checkpoint,
-    * because the bench unpersists all RDDs between queries; ScaleBench
-    * keeps measuring the real chain through [[longestDupSpanOf]]. */
-  private val win16Cache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
-  private def win16(s: SparkSession, dir: String): DataFrame = {
-    if (graft.core.SessionSpill.noMemo)
-      return win16Of(docs(s, dir)).localCheckpoint(true)
-    // populate is serialized: TrieMap.getOrElseUpdate can evaluate the
-    // thunk in two threads at once, and two concurrent overwrite-writes
-    // to the same path can clobber files the other is streaming back
-    val path = win16Cache.synchronized {
-      win16Cache.getOrElseUpdate(
-        (s.sparkContext.applicationId, dir), {
-          val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-          val root = new org.apache.hadoop.fs.Path(
-            graft.core.SessionSpill.root(s, "graft_win16"), safe)
-          win16Of(docs(s, dir)).write.mode("overwrite").parquet(root.toString)
-          root.toString
-        })
-    }
-    s.read.parquet(path)
-  }
+  /** Session memo of [[win16Of]] over the fixture corpus: q184 and
+    * q187 both start from this exact frame and each previously re-ran
+    * the normalize→split→window-hash explode. ScaleBench keeps
+    * measuring the real chain through [[longestDupSpanOf]]. */
+  private def win16(s: SparkSession, dir: String): DataFrame =
+    graft.core.SessionSpill.memoFrame(s, "graft_win16", dir)(win16Of(docs(s, dir)))
   private def emb(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "embeddings")
 
@@ -290,30 +268,16 @@ object Dedup {
           .otherwise("test").as("split"))
   }
 
-  /** Per-session spill of the contract corpus' LSH candidate pairs —
+  /** Session memo of the contract corpus' LSH candidate pairs —
     * ELEVEN contract queries (q30/q59/q110/q111/q168/q169/q172/q174,
     * dup-cluster stats, the capstones) start from this exact frame and
     * each previously re-ran the shingle→minhash→band-join chain. The
-    * pair set is tiny (≪ corpus) and a pure function of the corpus;
-    * parquet, not a checkpoint, because the bench unpersists all RDDs
-    * between queries. ScaleBench keeps measuring the real chain through
+    * pair set is tiny (≪ corpus) and a pure function of the corpus.
+    * ScaleBench keeps measuring the real chain through
     * [[lshCandidatePairsOf]]. */
-  private val lshPairsCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
-  private[operators] def lshCandidatePairs(s: SparkSession, dir: String): DataFrame = {
-    if (graft.core.SessionSpill.noMemo) return lshCandidatePairsOf(docs(s, dir))
-    val path = lshPairsCache.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir), {
-        val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-        val root = new org.apache.hadoop.fs.Path(
-          graft.core.SessionSpill.root(s, "graft_lsh_pairs"), safe)
-        lshCandidatePairsOf(docs(s, dir))
-          .write.mode("overwrite").parquet(root.toString)
-        root.toString
-      })
-    s.read.parquet(path)
-  }
+  private[operators] def lshCandidatePairs(s: SparkSession, dir: String): DataFrame =
+    graft.core.SessionSpill.memoFrame(s, "graft_lsh_pairs", dir)(
+      lshCandidatePairsOf(docs(s, dir)))
 
   /** q30's candidate generator over an arbitrary (doc_id, text) frame —
     * also the chain `ScaleBench` measures at 10×/50× amplification. */
@@ -1649,27 +1613,12 @@ object Dedup {
         size(col("ts")).as("n"))
   }
 
-  /** Per-session spill of the contract corpus' setsim lists — shared by
+  /** Session memo of the contract corpus' setsim lists — shared by
     * q138/q172/q174 (each previously rebuilt the shingle→hash→df→sort
-    * chain from scratch). Parquet, not a checkpoint: the bench
-    * unpersists all RDDs between queries (same rationale as the q94/q98
-    * signature spill). */
-  private val listsCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
-  private def setsimListsCached(s: SparkSession, dir: String): DataFrame = {
-    if (graft.core.SessionSpill.noMemo) return setsimListsOf(shingles(s, dir))
-    val path = listsCache.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir), {
-        val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-        val root = new org.apache.hadoop.fs.Path(
-          graft.core.SessionSpill.root(s, "graft_setsim_lists"), safe)
-        setsimListsOf(shingles(s, dir))
-          .write.mode("overwrite").parquet(root.toString)
-        root.toString
-      })
-    s.read.parquet(path)
-  }
+    * chain from scratch). */
+  private def setsimListsCached(s: SparkSession, dir: String): DataFrame =
+    graft.core.SessionSpill.memoFrame(s, "graft_setsim_lists", dir)(
+      setsimListsOf(shingles(s, dir)))
 
   private[graft] def exactSetSimJoinFromLists(listsIn: DataFrame)
       : (DataFrame, DataFrame) = {

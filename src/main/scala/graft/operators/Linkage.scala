@@ -43,26 +43,22 @@ object Linkage {
     * file re-read degrades gracefully — worst case one sequential
     * columnar scan per iteration — which is the behavior a
     * 1000-executor run needs. Shared by q200 and ScaleBench's graph
-    * family. */
-  /** Memoized (edge parquet, (node, outdeg) parquet) spill per
-    * (application, graphKey): q200 and q212 iterate the SAME trade
-    * graph, so the second of them re-reads the first's files instead
-    * of re-running the orders⋈lineitem build (same session-memo
-    * discipline as the LSH/setsim/co-purchase artifacts — documented
-    * in BASELINE.md; `-Dgraft.nomemo=1` disables, and ScaleBench
-    * passes no key so the ladder always measures the full chain). */
-  private val graphSpillCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), (String, String)]
-
-  /** `seeds` (single column `node`) switches the teleport term to a
+    * family.
+    *
+    * `seeds` (single column `node`) switches the teleport term to a
     * PERSONALIZED restart: rank mass starts at — and the 0.15 base
     * returns only to — the seed set, the random-walk-with-restart
     * variant behind "related entities" queries. With `None` every node
     * is a seed (s = 1), which reduces EXACTLY to the uniform integer
-    * arithmetic q200's oracle replays. `graphKey` opts the edge/degree
-    * spill into cross-query session memoization (see
-    * [[graphSpillCache]]); the seed flag is applied on the |V|-sized
-    * read, so differently-seeded queries share one graph spill. */
+    * arithmetic q200's oracle replays.
+    *
+    * `graphKey` opts the edge/degree spill into a session memo
+    * ([[graft.core.SessionSpill.memo]]): q200 and q212 iterate the SAME
+    * trade graph, so the second of them re-reads the first's files
+    * instead of re-running the orders⋈lineitem build. The seed flag is
+    * applied on the |V|-sized read, so differently-seeded queries share
+    * one graph spill; ScaleBench passes no key so the ladder always
+    * measures the full chain. */
   private[graft] def pageRank(edges: DataFrame, iters: Int,
                               seeds: Option[DataFrame] = None,
                               graphKey: Option[String] = None): DataFrame = {
@@ -94,23 +90,11 @@ object Linkage {
     // a semantically different edge definition get DIFFERENT spills
     // instead of silently iterating the wrong graph (the graphKey is
     // only a human-readable label; the semanticHash is the contract).
-    // The first build is synchronized — TrieMap.getOrElseUpdate is
-    // non-atomic, and two concurrent first-consumers racing the same
-    // parquet path is a corruption, not just wasted work.
-    val memoKey = graphKey.filter(_ => !graft.core.SessionSpill.noMemo)
-      .map { k =>
+    val (ePath, nPath, ephemeral) = graphKey match {
+      case Some(k) =>
         val fp = edges.queryExecution.analyzed.canonicalized.semanticHash()
-        (s.sparkContext.applicationId, s"${k}_h$fp")
-      }
-    val (ePath, nPath, ephemeral) = memoKey match {
-      case Some(mk) =>
-        val (e, n) = graphSpillCache.synchronized {
-          graphSpillCache.getOrElseUpdate(mk, {
-            val safe = mk._2.replaceAll("[^A-Za-z0-9._-]", "_")
-            writeSpill(new org.apache.hadoop.fs.Path(
-              graft.core.SessionSpill.root(s, "graft_graph_spill"), safe))
-          })
-        }
+        val (e, n) = graft.core.SessionSpill.memo(
+          s, "graft_graph_spill", s"${k}_h$fp")(writeSpill)
         (e, n, None)
       case None =>
         val base = new org.apache.hadoop.fs.Path(

@@ -77,31 +77,15 @@ object Mining {
       .groupBy(col("x.pk").as("a"), col("y.pk").as("b"))
       .agg(count(lit(1)).as("n_baskets"))
 
-  /** Per-session spill of the minSupport=30 co-purchase pair frame
+  /** Session memo of the minSupport=30 co-purchase pair frame
     * (a, b, n_baskets) — FIVE graph/basket queries (q143/q144/q155/
     * q161/q162) start from this exact frame and each previously re-ran
     * the distinct → support-prune → per-basket self-join chain from
     * scratch. Consumers apply their own n_baskets threshold on the
-    * read. Parquet, not a checkpoint, for the same reason as the LSH
-    * pair spill (Dedup.scala): the bench unpersists all RDD blocks
-    * between queries. */
-  private val coPairsCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
-  private[graft] def coPurchasePairs(s: SparkSession, dir: String): DataFrame = {
-    def build = pairCounts(frequentBasketItems(
-      Tables.load(s, dir, "lineitem"), 30L))
-    if (graft.core.SessionSpill.noMemo) return build
-    val path = coPairsCache.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir), {
-        val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-        val root = new org.apache.hadoop.fs.Path(
-          graft.core.SessionSpill.root(s, "graft_copurchase_pairs"), safe)
-        build.write.mode("overwrite").parquet(root.toString)
-        root.toString
-      })
-    s.read.parquet(path)
-  }
+    * read. */
+  private[graft] def coPurchasePairs(s: SparkSession, dir: String): DataFrame =
+    graft.core.SessionSpill.memoFrame(s, "graft_copurchase_pairs", dir)(
+      pairCounts(frequentBasketItems(Tables.load(s, dir, "lineitem"), 30L)))
 
   // ---- q145 shared: exact integer decay weights -----------------------
 

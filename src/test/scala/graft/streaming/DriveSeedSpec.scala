@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.core.SessionSpill
 
 /** Pins the q94/q98 drive-prefix seeding equivalence IN-SESSION,
   * independent of query execution order: the driver's Verify iterates
@@ -15,15 +16,18 @@ class DriveSeedSpec extends SparkSpec {
     graft.SparkEntry.queries(name)(spark, sf0001)
       .collect().map(_.toString).sorted.toSeq
 
+  private def seed =
+    SessionSpill.peek[(String, String)](spark, StreamingQueries.DriveSeedTag, sf0001)
+
   test("seeded q98 drive ≡ cold q98 drive (and q94 likewise)") {
     // force the unseeded path regardless of what earlier suites ran
-    StreamingQueries.driveSeedCache.clear()
+    SessionSpill.forget(StreamingQueries.DriveSeedTag)
     val cold98 = run("q98_incremental_dedup_compaction")
-    assert(StreamingQueries.driveSeedCache.isEmpty,
+    assert(seed.isEmpty,
       "a folding drive must never write the seed (its post-fold state " +
         "is the wrong prefix)")
     val cold94 = run("q94_incremental_dedup") // writes the snapshot
-    assert(StreamingQueries.driveSeedCache.nonEmpty,
+    assert(seed.nonEmpty,
       "the non-folding drive should have snapshotted batches 1-2")
     val warm98 = run("q98_incremental_dedup_compaction") // restores it
     val warm94 = run("q94_incremental_dedup")
