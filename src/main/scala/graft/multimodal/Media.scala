@@ -1,5 +1,10 @@
 package graft.multimodal
 
+import java.awt.image.{BufferedImage, IndexColorModel}
+import java.io.ByteArrayInputStream
+import javax.imageio.{ImageIO, ImageTypeSpecifier}
+import javax.imageio.stream.MemoryCacheImageInputStream
+
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -9,16 +14,15 @@ import org.apache.spark.sql.types._
   * run decode / feature-extract / resize / frame-sample as distributed
   * per-partition transforms.
   *
-  * The Spark-side plumbing — schema, partition-preserving mapPartitions,
-  * batch shape, typed Encoders — is real and tested, and so are FOUR
-  * pure-JVM codecs implemented below: PNG (incl. Adam7 interlace), GIF
-  * (real LZW, local color tables, animation frames), baseline JPEG
-  * (grayscale + color 4:2:0 Huffman/IDCT), and WAV PCM. Decode,
-  * feature-extract, and resize try the real codecs first; `StubCodec`
-  * remains ONLY as the deterministic fallback for payloads that are not
-  * decodable media at all (e.g. text bytes posing as blobs in the q42
-  * oracle fixture) and for genuinely out-of-scope formats (video
-  * containers — no pure-JVM video decode exists offline).
+  * PNG, GIF and JPEG pixels are decoded by the JDK's own ImageIO readers,
+  * all through one guarded helper ([[readFrames]]); WAV PCM and the image
+  * header parse (`ImageCodec`) are hand-written below. Each image codec
+  * keeps a fixture encoder (stored-deflate PNG, LZW GIF, baseline JPEG)
+  * that writes the byte-predictable payloads the oracle queries decode.
+  * Decode, feature-extract, and resize try the real codecs first;
+  * `StubCodec` remains ONLY as the deterministic fallback for payloads
+  * that are not decodable media at all (e.g. text bytes posing as blobs
+  * in the q42 oracle fixture).
   *
   * Scale posture: media blobs never pass through a shuffle — decode and
   * feature extraction are mapPartitions stages fused after the scan, and
@@ -74,6 +78,65 @@ object Media {
     * counts (same spirit as [[MaxDecodedBytes]]). */
   private[multimodal] val MaxAnimFrames: Int = 4096
 
+  /** The one image-decode path: up to `maxFrames` frames of `format`
+    * ("png", "gif" or "jpeg"), each handed to `convert` as soon as it is
+    * read. Safety properties, all load-bearing on untrusted bytes:
+    *  - a payload whose header [[ImageCodec]] does not parse as `format`
+    *    is turned away before any reader exists (q42's text rows would
+    *    otherwise pay a reader and an exception per codec);
+    *  - the reader is picked by format name; `ImageIO.read` would sniff
+    *    every registered format (BMP, WBMP, TIFF, …) and could match a
+    *    text blob;
+    *  - the input is an in-memory stream, never ImageIO's disk cache;
+    *  - before `read(i)`, the header's width × height × raw bands must
+    *    fit [[MaxDecodedBytes]] and the raw type must pass `accept`;
+    *  - the walk stops at `maxFrames` or at the reader's end of sequence
+    *    (IndexOutOfBoundsException past frame 0), never calling
+    *    `getNumImages(true)`, which walks a hostile file to its end.
+    * None when frame 0 is missing, any frame fails a check, or anything
+    * throws: corrupt media is data, not an error. Callers take samples
+    * from the raster ([[plane]]), never `getRGB`, which gamma-converts
+    * TYPE_BYTE_GRAY. */
+  private def readFrames[T](format: String, b: Array[Byte], maxFrames: Int,
+      accept: ImageTypeSpecifier => Boolean = _ => true)(
+      convert: BufferedImage => T): Option[Vector[T]] = {
+    if (!ImageCodec.dimensions(b).exists(_._1 == format)) return None
+    val reader = ImageIO.getImageReadersByFormatName(format).next()
+    val in = new MemoryCacheImageInputStream(new ByteArrayInputStream(b))
+    try {
+      reader.setInput(in)
+      val frames = Vector.newBuilder[T]
+      var i = 0
+      var end = false
+      while (!end && i < maxFrames) {
+        val raw = try reader.getRawImageType(i) catch {
+          case _: IndexOutOfBoundsException if i > 0 => end = true; null
+        }
+        if (!end) {
+          if (raw == null || !accept(raw) ||
+              reader.getWidth(i).toLong * reader.getHeight(i) *
+                raw.getSampleModel.getNumBands > MaxDecodedBytes) return None
+          frames += convert(reader.read(i))
+          i += 1
+        }
+      }
+      Some(frames.result())
+    } catch { case _: Exception => None }
+    finally { reader.dispose(); in.close() }
+  }
+
+  /** One band of a decoded image as row-major bytes, each sample passed
+    * through `f` (a GIF palette lookup; identity otherwise). */
+  private def plane(img: BufferedImage, band: Int,
+                    f: Int => Int = identity): Array[Byte] = {
+    val w = img.getWidth; val h = img.getHeight
+    val s = img.getRaster.getSamples(0, 0, w, h, band, new Array[Int](w * h))
+    val out = new Array[Byte](s.length)
+    var i = 0
+    while (i < s.length) { out(i) = f(s(i)).toByte; i += 1 }
+    out
+  }
+
   /** Spread a tiny driver frame across the session's shuffle width
     * before a synth/decode mapPartitions: the fixture tables arrive as
     * ONE parquet row group, so without this every codec leg — encode
@@ -110,27 +173,25 @@ object Media {
   }
 
   /** Decode + feature-extract: partition-local, no shuffle, blobs dropped
-    * from the output row. The real version would call the codec inside
-    * the same mapPartitions shape (one codec init per partition, not per
-    * row — the reason this is mapPartitions and not map). */
+    * from the output row. */
   def extractFeatures(media: Dataset[MediaRow]): Dataset[MediaFeatures] = {
     import media.sparkSession.implicits._
     media.mapPartitions { rows =>
-      // per-partition codec init would go here (expensive handle reuse)
       rows.map { m =>
-        // REAL codecs first (PNG, GIF-LZW, baseline JPEG pixel decode);
+        // REAL codecs first (PNG, GIF, baseline JPEG pixel decode);
         // opaque payloads keep the deterministic stub so non-image
         // media stay oracle-checkable. Each codec is tried at most once
         // per row and its result reused for intensity AND frame count.
         val png = PngCodec.decode(m.content)
-        val gif = if (png.isEmpty) GifCodec.decode(m.content) else None
+        val gif = if (png.isEmpty) GifCodec.decodeFrames(m.content, MaxAnimFrames)
+                  else None
         val jpg = if (png.isEmpty && gif.isEmpty) JpegCodec.decode(m.content)
                   else None
         val avi = if (png.isEmpty && gif.isEmpty && jpg.isEmpty)
                     Video.AviCodec.parse(m.content)
                   else None
         val mean = png.map(PngCodec.meanIntensity)
-          .orElse(gif.map(GifCodec.meanIntensity))
+          .orElse(gif.map(fs => GifCodec.meanIntensity(fs.head)))
           .orElse(jpg.map(JpegCodec.meanIntensity))
           .orElse(avi.map { c =>
             // pooled intensity over every decoded MJPEG frame
@@ -151,9 +212,7 @@ object Media {
         // containers, 1 for any other decodable still image, stub only
         // for genuinely opaque bytes
         val frames =
-          if (gif.isDefined)
-            GifCodec.decodeFrames(m.content, MaxAnimFrames)
-              .map(_.length).getOrElse(1)
+          if (gif.isDefined) gif.get.length
           else if (avi.isDefined) avi.get.framePayloads.length
           else if (png.isDefined || jpg.isDefined) 1
           else StubCodec.sampleFrames(m.content, 1024).length
@@ -223,13 +282,12 @@ object Media {
     })
   }
 
-  /** REAL pure-JVM image header codec — no native libraries, so it runs
-    * in any executor as-is. Parses (format, width, height) from the
-    * leading bytes of PNG (IHDR chunk, big-endian), GIF87a/89a (logical
-    * screen descriptor, little-endian), and JPEG (marker-segment scan to
-    * the first start-of-frame). This replaces the stubbed decode step
-    * for the dimension-extraction path; full pixel decode stays behind
-    * `StubCodec` (no image libs in this environment). */
+  /** Image header parser: (format, width, height) from the leading
+    * bytes of PNG (IHDR chunk, big-endian), GIF87a/89a (logical screen
+    * descriptor, little-endian), and JPEG (marker-segment scan to the
+    * first start-of-frame). Hand-written rather than ImageIO because it
+    * must read header-only payloads (the q77 fixtures end after the
+    * header), on which ImageIO's GIF and JPEG readers throw. */
   object ImageCodec {
     /** (format, width, height) if the payload starts with a recognized
       * image header; None for unknown/truncated/corrupt bytes. */
@@ -287,17 +345,16 @@ object Media {
     }
   }
 
-  /** Decoded raster: `pixels` is the unfiltered scanline data, row-major,
-    * `channels` interleaved bytes per pixel. */
+  /** Decoded raster: `pixels` is row-major, `channels` interleaved
+    * bytes per pixel. */
   case class PngPixels(width: Int, height: Int, channels: Int, pixels: Array[Byte])
 
-  /** REAL PNG pixel decode — pure JVM (`java.util.zip.Inflater` + the
-    * five T.81→RFC-2083 scanline filters), so it runs in any executor
-    * with no native image libraries. Scope: 8-bit greyscale (color type
-    * 0) and RGB (color type 2), non-interlaced OR Adam7-interlaced —
-    * the formats a training-data pipeline normalizes to; anything else
-    * returns None and falls back to the metadata-only path. This
-    * retires `StubCodec.decodeIntensities` for PNG payloads. */
+  /** PNG codec. Decode goes through the JDK's ImageIO PNG reader
+    * ([[readFrames]]). Scope: 8-bit greyscale (color type 0) and 8-bit
+    * RGB (color type 2), plain or Adam7-interlaced, no alpha and no
+    * palette — the formats a training-data pipeline normalizes to;
+    * anything else returns None and falls back to the metadata-only
+    * path. */
   object PngCodec {
     /** Adam7 pass grid: (xStart, yStart, xStep, yStep). Each pass is an
       * independent sub-image — filtered against its own rows — whose
@@ -307,128 +364,19 @@ object Media {
       (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
       (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
 
-    /** Undo per-scanline filters of one (sub-)image: `ph` rows of `pw`
-      * pixels at `off` in `raw`, each row led by its filter byte. None
-      * on an unknown filter type. */
-    private def unfilter(raw: Array[Byte], off: Int, pw: Int, ph: Int,
-                         channels: Int): Option[Array[Byte]] = {
-      val stride = pw * channels
-      val px = new Array[Byte](stride * ph)
-      val bpp = channels
-      var y = 0
-      while (y < ph) {
-        val f = raw(off + y * (stride + 1)) & 0xff
-        val rs = off + y * (stride + 1) + 1
-        val os = y * stride
-        var x = 0
-        while (x < stride) {
-          val rv = raw(rs + x) & 0xff
-          val left = if (x >= bpp) px(os + x - bpp) & 0xff else 0
-          val up = if (y > 0) px(os - stride + x) & 0xff else 0
-          val ul = if (y > 0 && x >= bpp) px(os - stride + x - bpp) & 0xff else 0
-          val v = f match {
-            case 0 => rv
-            case 1 => rv + left
-            case 2 => rv + up
-            case 3 => rv + (left + up) / 2
-            case 4 => // Paeth: nearest of left/up/upper-left to their sum-diff
-              val p = left + up - ul
-              val pa = math.abs(p - left); val pb = math.abs(p - up); val pc = math.abs(p - ul)
-              rv + (if (pa <= pb && pa <= pc) left else if (pb <= pc) up else ul)
-            case _ => return None
-          }
-          px(os + x) = (v & 0xff).toByte
-          x += 1
-        }
-        y += 1
-      }
-      Some(px)
-    }
-
-    def decode(b: Array[Byte]): Option[PngPixels] = try {
-      def u8(i: Int) = b(i) & 0xff
-      def be32(i: Int) = (u8(i) << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
-      if (b.length < 8 || u8(0) != 0x89 || b(1) != 'P' || b(2) != 'N' || b(3) != 'G')
-        return None
-      var i = 8
-      var w = 0; var h = 0; var colorType = -1; var interlace = 0
-      val idat = new java.io.ByteArrayOutputStream()
-      var end = false
-      while (!end && i + 8 <= b.length) {
-        val len = be32(i)
-        if (len < 0 || i + 12 + len > b.length) return None // truncated chunk
-        val typ = new String(b, i + 4, 4, "US-ASCII")
-        typ match {
-          case "IHDR" =>
-            if (len < 13) return None
-            w = be32(i + 8); h = be32(i + 12)
-            val bitDepth = u8(i + 16); colorType = u8(i + 17)
-            interlace = u8(i + 20)
-            if (bitDepth != 8 || (colorType != 0 && colorType != 2) ||
-                interlace > 1)
-              return None // out of scope: fall back to metadata-only
-          case "IDAT" => idat.write(b, i + 8, len)
-          case "IEND" => end = true
-          case _ => () // ancillary chunks skipped
-        }
-        i += 12 + len
-      }
-      if (w <= 0 || h <= 0 || colorType < 0 || idat.size == 0) return None
-      val channels = if (colorType == 0) 1 else 3
-      if (w.toLong * h * channels > MaxDecodedBytes) return None // alloc cap
-      // the 1×1 "pass grid" makes non-interlaced a degenerate Adam7
-      val passes = if (interlace == 0) Seq((0, 0, 1, 1)) else Adam7
-      val passDims = passes.map { case (x0, y0, dx, dy) =>
-        ((w - x0 + dx - 1) / dx, (h - y0 + dy - 1) / dy) }
-      val rawLen = passDims.map { case (pw, ph) =>
-        if (pw <= 0 || ph <= 0) 0 else ph * (pw * channels + 1) }.sum
-      // inflate the zlib stream. The loop runs to finished() — not just
-      // until the buffer fills — so the Inflater always reaches and
-      // VERIFIES the adler32 trailer (DataFormatException → None);
-      // stopping at the expected byte count would accept corrupt pixel
-      // data whose damage sits before the trailer.
-      val inf = new java.util.zip.Inflater()
-      inf.setInput(idat.toByteArray)
-      val raw = new Array[Byte](rawLen)
-      val overflow = new Array[Byte](1)
-      var off = 0
-      while (!inf.finished()) {
-        val n =
-          if (off < raw.length) inf.inflate(raw, off, raw.length - off)
-          else inf.inflate(overflow, 0, 1)
-        if (off >= raw.length && n > 0) return None // longer than w·h — malformed
-        if (off < raw.length) off += n
-        if (n == 0 && !inf.finished() &&
-            (inf.needsInput() || inf.needsDictionary())) return None // truncated
-      }
-      inf.end()
-      if (off < raw.length) return None // short pixel stream
-      val px = new Array[Byte](w * h * channels)
-      var rawOff = 0
-      var pi = 0
-      while (pi < passes.length) {
-        val (x0, y0, dx, dy) = passes(pi)
-        val (pw, ph) = passDims(pi)
-        if (pw > 0 && ph > 0) {
-          val sub = unfilter(raw, rawOff, pw, ph, channels).getOrElse(return None)
-          rawOff += ph * (pw * channels + 1)
-          var py = 0
-          while (py < ph) {
-            var sx = 0
-            while (sx < pw) {
-              val dst = ((y0 + py * dy) * w + (x0 + sx * dx)) * channels
-              val src = (py * pw + sx) * channels
-              var c = 0
-              while (c < channels) { px(dst + c) = sub(src + c); c += 1 }
-              sx += 1
-            }
-            py += 1
-          }
-        }
-        pi += 1
-      }
-      Some(PngPixels(w, h, channels, px))
-    } catch { case _: Exception => None } // corrupt deflate/adler → not decodable
+    def decode(b: Array[Byte]): Option[PngPixels] =
+      readFrames("png", b, maxFrames = 1, accept = t => {
+        val cm = t.getColorModel
+        !cm.hasAlpha && !cm.isInstanceOf[IndexColorModel] &&
+          t.getSampleModel.getSampleSize.forall(_ == 8)
+      }) { img =>
+        val channels = img.getColorModel.getNumColorComponents
+        val planes = Array.tabulate(channels)(plane(img, _))
+        val px = new Array[Byte](planes(0).length * channels)
+        var i = 0
+        while (i < px.length) { px(i) = planes(i % channels)(i / channels); i += 1 }
+        PngPixels(img.getWidth, img.getHeight, channels, px)
+      }.map(_.head)
 
     /** Mean pixel intensity in [0, 1]: the same integer sum / (n·255)
       * arithmetic the q85 oracle predicts in closed form. */
@@ -442,9 +390,9 @@ object Media {
       * deflate blocks — structurally a fully-valid PNG (zlib header,
       * adler32, chunk CRCs) whose pixel payload is byte-predictable, so
       * an oracle can compute the decoded statistics arithmetically.
-      * Each scanline is forward-filtered with `filterOf(y)` cycling
-      * through all four non-trivial filters, making the decoder's
-      * unfilter path the thing under test. */
+      * Each scanline is forward-filtered, cycling through all four
+      * non-trivial filters, so the fixtures make the decoder undo every
+      * filter type. */
     def encodeStoredGray(w: Int, h: Int, pixel: (Int, Int) => Int,
                          interlaced: Boolean = false): Array[Byte] = {
       // forward-filter one (sub-)image's scanlines (type byte +
@@ -542,38 +490,17 @@ object Media {
     * per pixel index). */
   case class GifPixels(width: Int, height: Int, pixels: Array[Byte])
 
-  /** REAL pure-JVM GIF codec: full LZW decode of the first image of a
-    * GIF87a/89a stream (reference renders media for certificate/org
-    * records only as opaque URLs — this is the driver-mandate multimodal
-    * extension, q88). The decoder is canonical variable-width GIF-LZW:
-    * code width starts minCodeSize+1 and bumps when the table reaches
-    * 2^width (cap 12 bits / 4096 entries); CLEAR resets table and
-    * width; the KwKwK case (code == next table slot) is handled. The
-    * paired encoder exists to synthesize byte-predictable fixtures: it
-    * compresses for real (dictionary growth, width bumps one entry
+  /** GIF codec. Decode goes through the JDK's ImageIO GIF reader
+    * ([[readFrames]]) and maps each pixel index to its palette entry's
+    * R channel, taken from the image's local color table when it has
+    * one, else the global one. The paired encoders generate the oracle
+    * fixtures: a 256-entry gray-ramp palette (index == intensity) and
+    * real variable-width LZW (dictionary growth, width bumps one entry
     * after the decoder's boundary — giflib's RunningCode > MaxCode1
-    * rule — CLEAR at table-full), so encode→decode round-trips exercise
-    * every decoder path. A per-image local color table takes precedence
-    * over the global one; interlace is out of scope → None (fall back
-    * to header-only metadata). */
+    * rule — CLEAR at table-full), which that independent decoder must
+    * invert exactly. */
   object GifCodec {
     private val MaxCodes = 4096
-
-    /** LSB-first bit reader over the concatenated sub-block payload. */
-    private final class BitReader(data: Array[Byte]) {
-      private var pos = 0
-      def read(width: Int): Int = {
-        if (pos + width > data.length * 8) return -1
-        var v = 0; var i = 0
-        while (i < width) {
-          val p = pos + i
-          if (((data(p >> 3) >> (p & 7)) & 1) == 1) v |= 1 << i
-          i += 1
-        }
-        pos += width
-        v
-      }
-    }
 
     /** LSB-first bit writer that packages into ≤255-byte sub-blocks. */
     private final class BitWriter {
@@ -602,55 +529,6 @@ object Media {
         out.write(0) // block terminator
         out.toByteArray
       }
-    }
-
-    /** Decode `expected` pixel indices from a GIF-LZW stream. */
-    private def lzwDecode(minCode: Int, data: Array[Byte],
-                          expected: Int): Option[Array[Byte]] = {
-      val clear = 1 << minCode
-      val end = clear + 1
-      val prefix = new Array[Int](MaxCodes)
-      val suffix = new Array[Byte](MaxCodes)
-      val stack = new Array[Byte](MaxCodes + 1)
-      val out = new Array[Byte](expected)
-      val r = new BitReader(data)
-      var width = minCode + 1
-      var avail = end + 1
-      var old = -1
-      var n = 0
-      while (n < expected) {
-        val code = r.read(width)
-        if (code < 0 || code == end) return None // truncated mid-image
-        if (code == clear) {
-          width = minCode + 1; avail = end + 1; old = -1
-        } else if (old == -1) {
-          if (code >= clear) return None // first code must be a root
-          out(n) = code.toByte; n += 1
-          old = code
-        } else {
-          if (code > avail) return None // gap in the code space
-          var sp = 0
-          var c = code
-          if (c == avail) { // KwKwK: string = old + head(old)
-            var h = old
-            while (h >= clear + 2) h = prefix(h)
-            stack(sp) = h.toByte; sp += 1
-            c = old
-          }
-          while (c >= clear + 2) { stack(sp) = suffix(c); sp += 1; c = prefix(c) }
-          stack(sp) = c.toByte; sp += 1 // the root
-          val head = stack(sp - 1)
-          while (sp > 0 && n < expected) { sp -= 1; out(n) = stack(sp); n += 1 }
-          if (sp > 0) return None // string overran w·h — malformed
-          if (avail < MaxCodes) {
-            prefix(avail) = old; suffix(avail) = head
-            avail += 1
-            if (avail == (1 << width) && width < 12) width += 1
-          }
-          old = code
-        }
-      }
-      Some(out)
     }
 
     /** Compress pixel indices as a real GIF-LZW stream (with CLEAR at
@@ -694,90 +572,16 @@ object Media {
     }
 
     def decode(b: Array[Byte]): Option[GifPixels] =
-      decodeFrames(b, maxFrames = 1).flatMap(_.headOption)
+      decodeFrames(b, maxFrames = 1).map(_.head)
 
     /** Decode up to `maxFrames` image frames of a (possibly animated)
-      * GIF: the same walk as the single-frame decode, but image
-      * descriptors accumulate instead of returning — graphic control
-      * extensions between frames ride the generic extension-skip path.
-      * Every frame runs the REAL LZW decode + palette mapping. */
-    def decodeFrames(b: Array[Byte], maxFrames: Int): Option[Vector[GifPixels]] = try {
-      def u8(i: Int) = b(i) & 0xff
-      def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
-      if (b.length < 13 || b(0) != 'G' || b(1) != 'I' || b(2) != 'F') return None
-      val packed = u8(10)
-      val gctSize = if ((packed & 0x80) != 0) 2 << (packed & 7) else 0
-      val gct = new Array[Byte](math.max(gctSize, 0))
-      var i = 13
-      if (gctSize > 0) {
-        if (i + gctSize * 3 > b.length) return None
-        var c = 0
-        while (c < gctSize) { gct(c) = b(i + c * 3); c += 1 } // R channel
-        i += gctSize * 3
+      * GIF, each at its own image-descriptor size; None if any frame
+      * before the cap fails to decode. */
+    def decodeFrames(b: Array[Byte], maxFrames: Int): Option[Vector[GifPixels]] =
+      readFrames("gif", b, maxFrames) { img =>
+        val palette = img.getColorModel.asInstanceOf[IndexColorModel]
+        GifPixels(img.getWidth, img.getHeight, plane(img, 0, palette.getRed))
       }
-      // walk blocks collecting image descriptors
-      val frames = Vector.newBuilder[GifPixels]
-      var nFrames = 0
-      while (i < b.length) {
-        u8(i) match {
-          case 0x21 => // extension: label + sub-blocks
-            i += 2
-            while (i < b.length && u8(i) != 0) i += 1 + u8(i)
-            i += 1
-          case 0x2c =>
-            if (i + 10 > b.length) return None
-            val iw = le16(i + 5); val ih = le16(i + 7)
-            val ipacked = u8(i + 9)
-            if ((ipacked & 0x40) != 0) return None // interlaced: out of scope
-            if (iw <= 0 || ih <= 0) return None
-            if (iw.toLong * ih > MaxDecodedBytes) return None // alloc cap
-            i += 10
-            // a local color table takes precedence over the global one
-            // for this image (GIF89a §20); R channel, like the GCT
-            var pal = gct; var palSize = gctSize
-            if ((ipacked & 0x80) != 0) {
-              val n = 2 << (ipacked & 7)
-              if (i + n * 3 > b.length) return None
-              val lct = new Array[Byte](n)
-              var c = 0
-              while (c < n) { lct(c) = b(i + c * 3); c += 1 }
-              pal = lct; palSize = n
-              i += n * 3
-            }
-            if (palSize == 0) return None // no palette at all
-            val minCode = u8(i); i += 1
-            if (minCode < 2 || minCode > 8) return None
-            // concatenate the data sub-blocks
-            val data = new java.io.ByteArrayOutputStream()
-            while (i < b.length && u8(i) != 0) {
-              val n = u8(i)
-              if (i + 1 + n > b.length) return None
-              data.write(b, i + 1, n)
-              i += 1 + n
-            }
-            i += 1 // sub-block terminator
-            val idx = lzwDecode(minCode, data.toByteArray, iw * ih)
-              .getOrElse(return None)
-            val px = new Array[Byte](iw * ih)
-            var p = 0
-            while (p < px.length) {
-              val ci = idx(p) & 0xff
-              if (ci >= palSize) return None // index outside the palette
-              px(p) = pal(ci)
-              p += 1
-            }
-            frames += GifPixels(iw, ih, px)
-            nFrames += 1
-            if (nFrames >= maxFrames) return Some(frames.result())
-          case 0x3b => // trailer
-            val fs = frames.result()
-            return if (fs.nonEmpty) Some(fs) else None
-          case _ => return None
-        }
-      }
-      val fs = frames.result()
-      if (fs.nonEmpty) Some(fs) else None
-    } catch { case _: Exception => None }
 
     /** Mean pixel intensity in [0, 1] — q85's integer-sum arithmetic. */
     def meanIntensity(p: GifPixels): Double = {
@@ -940,23 +744,16 @@ object Media {
   /** Decoded JPEG frame: grayscale samples. */
   case class JpegPixels(width: Int, height: Int, pixels: Array[Byte])
 
-  /** REAL pure-JVM baseline JPEG codec (grayscale): the q89 pixel-decode
-    * path under the round-6 header parser. Decoder implements the full
-    * baseline pipeline — marker walk, DQT/DHT/SOF0/SOS parse, canonical
-    * Huffman decode built from the FILE's tables (spec F.2.2.3
-    * mincode/maxcode/valptr), byte-unstuffing, DC prediction +
-    * magnitude EXTEND, AC run/size with EOB and ZRL, dequantization,
-    * zigzag (generated, not transcribed), separable double IDCT, level
-    * shift + clamp, edge-block cropping. Out of scope → None (fall back
-    * to header-only metadata): progressive (SOF2), multi-component
-    * color, restart intervals, 12-bit precision. The paired encoder
-    * runs the real forward pipeline (replicate-pad, FDCT, quantize,
-    * zigzag, canonical Huffman, stuffing) with simple flat canonical
-    * tables — legal JPEG: any complete DHT spec is valid, and the
-    * decoder reads whatever the file declares. DC-only (block-constant)
-    * images survive FDCT→IDCT bit-exactly, which is what makes the q89
-    * oracle closed-form; noisy round-trips are bounded by quantization
-    * rounding only (all-ones quant table), property-tested at ±2. */
+  /** Baseline JPEG codec. Decode goes through the JDK's ImageIO JPEG
+    * reader ([[readFrames]]). The paired encoders generate the oracle
+    * fixtures with the real forward pipeline (replicate-pad, FDCT,
+    * quantize, zigzag, canonical Huffman, stuffing) and simple flat
+    * canonical tables — legal JPEG: any complete DHT spec is valid, and
+    * a decoder reads whatever the file declares. DC-only
+    * (block-constant) images survive FDCT→IDCT bit-exactly, which is
+    * what makes the q89 oracle closed-form; noisy round-trips through
+    * that independent decoder are bounded by quantization rounding only
+    * (all-ones quant table), property-tested at ±2. */
   object JpegCodec {
     /** zigzag[k] = natural (row-major) index of the k-th coefficient in
       * zigzag scan order — generated by the diagonal walk. */
@@ -999,66 +796,6 @@ object Media {
       out
     }
 
-    /** Decoder-side canonical tables (spec F.2.2.3). */
-    private final class HuffTable(bits: Array[Int], vals: Array[Int]) {
-      val minCode = new Array[Int](17)
-      val maxCode = new Array[Int](17) // -1 = no codes at this length
-      val valPtr = new Array[Int](17)
-      private var code = 0; private var k = 0
-      for (len <- 1 to 16) {
-        if (bits(len) == 0) maxCode(len) = -1
-        else {
-          valPtr(len) = k
-          minCode(len) = code
-          code += bits(len); k += bits(len)
-          maxCode(len) = code - 1
-        }
-        code <<= 1
-      }
-      def value(len: Int, codeVal: Int): Int = vals(valPtr(len) + codeVal - minCode(len))
-    }
-
-    /** MSB-first reader over entropy-coded data with 0xFF00 unstuffing;
-      * stops (returns -1) at any real marker. */
-    private final class JBitReader(b: Array[Byte], start: Int) {
-      private var pos = start
-      private var cur = 0; private var nBits = 0
-      private var eos = false
-      private def fill(): Unit = {
-        if (eos || pos >= b.length) { eos = true; return }
-        var v = b(pos) & 0xff
-        if (v == 0xff) {
-          if (pos + 1 < b.length && (b(pos + 1) & 0xff) == 0x00) pos += 1 // stuffed
-          else { eos = true; return } // a real marker terminates the scan
-        }
-        pos += 1
-        cur = (cur << 8) | v; nBits += 8
-      }
-      def bit(): Int = {
-        if (nBits == 0) fill()
-        if (nBits == 0) return -1
-        nBits -= 1
-        (cur >> nBits) & 1
-      }
-      /** `n` bits MSB-first, -1 on truncation. */
-      def bits(n: Int): Int = {
-        var v = 0; var i = 0
-        while (i < n) { val x = bit(); if (x < 0) return -1; v = (v << 1) | x; i += 1 }
-        v
-      }
-      def decode(t: HuffTable): Int = {
-        var code = 0
-        var len = 0
-        while (len < 16) {
-          val x = bit(); if (x < 0) return -1
-          code = (code << 1) | x; len += 1
-          if (t.maxCode(len) >= 0 && code >= t.minCode(len) &&
-            code <= t.maxCode(len)) return t.value(len, code)
-        }
-        -1
-      }
-    }
-
     /** MSB-first writer with byte stuffing; 1-fill on flush (spec). */
     private final class JBitWriter(out: java.io.ByteArrayOutputStream) {
       private var cur = 0; private var nBits = 0
@@ -1077,52 +814,14 @@ object Media {
       def flush(): Unit = if (nBits > 0) write((1 << (8 - nBits)) - 1, 8 - nBits)
     }
 
-    /** Magnitude category decode (spec F.2.2.1 EXTEND). */
-    private def extend(v: Int, size: Int): Int =
-      if (size == 0) 0
-      else if (v < (1 << (size - 1))) v - (1 << size) + 1
-      else v
-
     /** cos((2x+1)·u·π/16) and the DC 1/√2 normalizer, tabulated once —
-      * the separable row/column passes below never call math.cos. The
-      * 2D transform factors into two 8-point passes: O(2·8³) multiplies
-      * per block instead of the direct form's O(8⁴) (measured 10×+ on
-      * the q89 bench — the decode was the single most expensive query
-      * before this). */
+      * the separable row/column passes of `fdct` never call math.cos:
+      * the 2D transform factors into two 8-point passes, O(2·8³)
+      * multiplies per block instead of the direct form's O(8⁴). */
     private val CosT: Array[Array[Double]] =
       Array.tabulate(8, 8)((u, x) => math.cos((2 * x + 1) * u * math.Pi / 16))
     private val Cn: Array[Double] =
       Array.tabulate(8)(u => if (u == 0) 1.0 / math.sqrt(2) else 1.0)
-
-    private def idct(coef: Array[Double]): Array[Double] = {
-      val tmp = new Array[Double](64) // tmp(v*8+x) = Σ_u c(u)·F(v,u)·cos(u,x)
-      var v = 0
-      while (v < 8) {
-        var x = 0
-        while (x < 8) {
-          var s = 0.0
-          var u = 0
-          while (u < 8) { s += Cn(u) * coef(v * 8 + u) * CosT(u)(x); u += 1 }
-          tmp(v * 8 + x) = s
-          x += 1
-        }
-        v += 1
-      }
-      val out = new Array[Double](64)
-      var y = 0
-      while (y < 8) {
-        var x = 0
-        while (x < 8) {
-          var s = 0.0
-          var w = 0
-          while (w < 8) { s += Cn(w) * tmp(w * 8 + x) * CosT(w)(y); w += 1 }
-          out(y * 8 + x) = s / 4.0
-          x += 1
-        }
-        y += 1
-      }
-      out
-    }
 
     private def fdct(px: Array[Double]): Array[Double] = {
       val tmp = new Array[Double](64) // tmp(y*8+u) = Σ_x px(y,x)·cos(u,x)
@@ -1154,242 +853,29 @@ object Media {
       out
     }
 
-    /** One frame component as declared by SOF0: id, sampling factors,
-      * quant-table selector. */
-    private final case class FrameComp(id: Int, hs: Int, vs: Int, tq: Int)
-
-    /** Core baseline decode to full-resolution sample planes: 1 plane
-      * (luma) for grayscale files, 3 planes (Y, Cb, Cr — chroma already
-      * upsampled to w×h by sample replication) for color. Handles the
-      * general interleaved-MCU scan for sampling factors 1–2 in each
-      * axis, which covers 4:4:4, 4:2:2, 4:4:0 and the web-dominant
-      * 4:2:0. Out of scope → None: progressive (SOF2), restart
-      * intervals, 12-bit precision, non-interleaved multi-scan. */
-    private def decodePlanes(b: Array[Byte]): Option[(Int, Int, Array[Array[Byte]])] = try {
-      def u8(i: Int) = b(i) & 0xff
-      def u16(i: Int) = (u8(i) << 8) | u8(i + 1)
-      if (b.length < 4 || u8(0) != 0xff || u8(1) != 0xd8) return None
-      val quant = new Array[Array[Int]](4)
-      val dcTabs = new Array[HuffTable](4)
-      val acTabs = new Array[HuffTable](4)
-      var w = 0; var h = 0
-      var comps: Array[FrameComp] = null
-      var i = 2
-      while (i + 4 <= b.length) {
-        if (u8(i) != 0xff) return None
-        val m = u8(i + 1)
-        if (m == 0xd8 || (m >= 0xd0 && m <= 0xd7)) { i += 2 } // standalone
-        else {
-          val len = u16(i + 2)
-          val seg = i + 4
-          m match {
-            case 0xdb => // DQT: possibly several tables
-              var p = seg
-              while (p < seg + len - 2) {
-                val pq = u8(p) >> 4; val tq = u8(p) & 15
-                if (pq != 0) return None // 16-bit tables out of scope
-                val t = new Array[Int](64)
-                var k = 0
-                while (k < 64) { t(k) = u8(p + 1 + k); k += 1 }
-                quant(tq) = t
-                p += 65
-              }
-            case 0xc4 => // DHT: possibly several tables
-              var p = seg
-              while (p < seg + len - 2) {
-                val tc = u8(p) >> 4; val th = u8(p) & 15
-                val bits = new Array[Int](17)
-                var total = 0
-                var l = 1
-                while (l <= 16) { bits(l) = u8(p + l); total += bits(l); l += 1 }
-                val vals = new Array[Int](total)
-                var k = 0
-                while (k < total) { vals(k) = u8(p + 17 + k); k += 1 }
-                val t = new HuffTable(bits, vals)
-                if (tc == 0) dcTabs(th) = t else acTabs(th) = t
-                p += 17 + total
-              }
-            case 0xc0 => // SOF0 baseline
-              if (u8(seg) != 8) return None // 12-bit precision out of scope
-              h = u16(seg + 1); w = u16(seg + 3)
-              val nf = u8(seg + 5)
-              if (nf != 1 && nf != 3) return None // gray or YCbCr
-              comps = Array.tabulate(nf) { c =>
-                val p = seg + 6 + 3 * c
-                FrameComp(u8(p), u8(p + 1) >> 4, u8(p + 1) & 15, u8(p + 2))
-              }
-              if (comps.exists(c => c.hs < 1 || c.hs > 2 || c.vs < 1 || c.vs > 2))
-                return None // sampling factors beyond 2 out of scope
-            case 0xc1 | 0xc2 | 0xc3 | 0xc5 | 0xc6 | 0xc7 |
-                 0xc9 | 0xca | 0xcb | 0xcd | 0xce | 0xcf =>
-              return None // non-baseline frame types out of scope
-            case 0xdd => return None // restart intervals out of scope
-            case 0xda => // SOS: one interleaved scan of all components
-              val ns = u8(seg)
-              if (comps == null || ns != comps.length) return None
-              if (w <= 0 || h <= 0) return None
-              if (w.toLong * h * comps.length > MaxDecodedBytes) return None // alloc cap
-              val nc = comps.length
-              val scanDc = new Array[HuffTable](nc)
-              val scanAc = new Array[HuffTable](nc)
-              val qts = new Array[Array[Int]](nc)
-              var sc = 0
-              while (sc < ns) {
-                val cid = u8(seg + 1 + 2 * sc)
-                val ci = comps.indexWhere(_.id == cid)
-                if (ci < 0) return None
-                scanDc(ci) = dcTabs(u8(seg + 2 + 2 * sc) >> 4)
-                scanAc(ci) = acTabs(u8(seg + 2 + 2 * sc) & 15)
-                qts(ci) = quant(comps(ci).tq)
-                if (scanDc(ci) == null || scanAc(ci) == null || qts(ci) == null)
-                  return None
-                sc += 1
-              }
-              val maxH = comps.map(_.hs).max; val maxV = comps.map(_.vs).max
-              // component planes at their natural (subsampled) resolution
-              val cw = Array.tabulate(nc)(c => (w * comps(c).hs + maxH - 1) / maxH)
-              val ch = Array.tabulate(nc)(c => (h * comps(c).vs + maxV - 1) / maxV)
-              val planes = Array.tabulate(nc)(c => new Array[Byte](cw(c) * ch(c)))
-              val mcusX = (w + 8 * maxH - 1) / (8 * maxH)
-              val mcusY = (h + 8 * maxV - 1) / (8 * maxV)
-              val r = new JBitReader(b, seg + len - 2)
-              val dcPred = new Array[Int](nc)
-              val coef = new Array[Double](64)
-              var my = 0
-              while (my < mcusY) {
-                var mx = 0
-                while (mx < mcusX) {
-                  var c = 0
-                  while (c < nc) {
-                    val qt = qts(c); val dcT = scanDc(c); val acT = scanAc(c)
-                    var bv = 0
-                    while (bv < comps(c).vs) {
-                      var bhz = 0
-                      while (bhz < comps(c).hs) {
-                        java.util.Arrays.fill(coef, 0.0)
-                        val s = r.decode(dcT)
-                        if (s < 0 || s > 11) return None
-                        val diffBits = if (s == 0) 0 else r.bits(s)
-                        if (diffBits < 0) return None
-                        dcPred(c) += extend(diffBits, s)
-                        coef(0) = dcPred(c).toDouble * qt(0)
-                        var k = 1
-                        var open = true
-                        while (open && k < 64) {
-                          val rs = r.decode(acT)
-                          if (rs < 0) return None
-                          if (rs == 0x00) open = false // EOB
-                          else if (rs == 0xf0) k += 16 // ZRL
-                          else {
-                            k += rs >> 4
-                            val size = rs & 15
-                            if (k > 63) return None
-                            val vb = r.bits(size)
-                            if (vb < 0) return None
-                            coef(Zigzag(k)) = extend(vb, size).toDouble * qt(k)
-                            k += 1
-                          }
-                        }
-                        val block = idct(coef)
-                        // block origin in the COMPONENT plane; edge-MCU
-                        // blocks can overhang — cropped by bounds checks
-                        val ox = (mx * comps(c).hs + bhz) * 8
-                        val oy = (my * comps(c).vs + bv) * 8
-                        var y = 0
-                        while (y < 8) {
-                          val py = oy + y
-                          if (py < ch(c)) {
-                            var x = 0
-                            while (x < 8) {
-                              val pxx = ox + x
-                              if (pxx < cw(c)) {
-                                val v = math.round(block(y * 8 + x) + 128.0).toInt
-                                planes(c)(py * cw(c) + pxx) =
-                                  math.max(0, math.min(255, v)).toByte
-                              }
-                              x += 1
-                            }
-                          }
-                          y += 1
-                        }
-                        bhz += 1
-                      }
-                      bv += 1
-                    }
-                    c += 1
-                  }
-                  mx += 1
-                }
-                my += 1
-              }
-              // upsample subsampled planes to full resolution (sample
-              // replication — with the encoder's box-downsampled chroma
-              // this is the standard nearest-neighbor reconstruction)
-              val full = Array.tabulate(nc) { c =>
-                if (cw(c) == w && ch(c) == h) planes(c)
-                else {
-                  val o = new Array[Byte](w * h)
-                  var y = 0
-                  while (y < h) {
-                    val sy = math.min(y * comps(c).vs / maxV, ch(c) - 1)
-                    var x = 0
-                    while (x < w) {
-                      val sx = math.min(x * comps(c).hs / maxH, cw(c) - 1)
-                      o(y * w + x) = planes(c)(sy * cw(c) + sx)
-                      x += 1
-                    }
-                    y += 1
-                  }
-                  o
-                }
-              }
-              return Some((w, h, full))
-            case 0xd9 => return None // EOI before SOS
-            case _ => () // APPn/COM/etc: skip
-          }
-          i += 2 + len
-        }
-      }
-      None
-    } catch { case _: Exception => None }
-
     /** Grayscale decode — 1-component files only (the q89 contract);
       * color files go through `decodeColor`. */
     def decode(b: Array[Byte]): Option[JpegPixels] =
-      decodePlanes(b).collect {
-        case (w, h, planes) if planes.length == 1 => JpegPixels(w, h, planes(0))
-      }
+      readFrames("jpeg", b, maxFrames = 1,
+          accept = _.getSampleModel.getNumBands == 1) { img =>
+        JpegPixels(img.getWidth, img.getHeight, plane(img, 0))
+      }.map(_.head)
 
     /** Decoded color frame: full-resolution R/G/B sample planes. */
     case class JpegColor(width: Int, height: Int,
                          r: Array[Byte], g: Array[Byte], b: Array[Byte])
 
-    /** Color decode: 3-component YCbCr (any supported sampling, incl.
-      * 4:2:0) → RGB via the JFIF/CCIR-601 conversion, rounded then
-      * clamped per channel; grayscale files map to R=G=B=Y. */
+    /** Color decode: 3-component YCbCr (any sampling, incl. 4:2:0) → RGB
+      * by the reader's JFIF conversion; grayscale files map to
+      * R=G=B=Y. */
     def decodeColor(bytes: Array[Byte]): Option[JpegColor] =
-      decodePlanes(bytes).map { case (w, h, planes) =>
-        if (planes.length == 1) JpegColor(w, h, planes(0), planes(0), planes(0))
-        else {
-          val yP = planes(0); val cbP = planes(1); val crP = planes(2)
-          val n = w * h
-          val r = new Array[Byte](n)
-          val g = new Array[Byte](n)
-          val bl = new Array[Byte](n)
-          def clamp(v: Long): Byte = math.max(0L, math.min(255L, v)).toByte
-          var i = 0
-          while (i < n) {
-            val yv = (yP(i) & 0xff).toDouble
-            val cb = ((cbP(i) & 0xff) - 128).toDouble
-            val cr = ((crP(i) & 0xff) - 128).toDouble
-            r(i) = clamp(math.round(yv + 1.402 * cr))
-            g(i) = clamp(math.round(yv - 0.344136 * cb - 0.714136 * cr))
-            bl(i) = clamp(math.round(yv + 1.772 * cb))
-            i += 1
-          }
-          JpegColor(w, h, r, g, bl)
-        }
-      }
+      readFrames("jpeg", bytes, maxFrames = 1) { img =>
+        val w = img.getWidth; val h = img.getHeight
+        if (img.getRaster.getNumBands == 1) {
+          val y = plane(img, 0)
+          JpegColor(w, h, y, y, y)
+        } else JpegColor(w, h, plane(img, 0), plane(img, 1), plane(img, 2))
+      }.map(_.head)
 
     /** Mean pixel intensity in [0, 1] — the shared integer-sum form. */
     def meanIntensity(p: JpegPixels): Double = {
@@ -1614,9 +1100,10 @@ object Media {
     * whose pixel values are arithmetic in doc_id — pixel(x, y) =
     * doc_id%200 + y, constant per row, no mod-256 wrap by construction
     * (≤ 199+18). The q85 oracle predicts the decoded mean intensity in
-    * closed form, so the REAL inflate+unfilter path is what's under
-    * test. Width/height are intentionally small (≤35×19): the point is
-    * filter/codec coverage per row, not pixel volume. */
+    * closed form, so the full decode (inflate, every scanline filter,
+    * Adam7) is what's under test. Width/height are intentionally small
+    * (≤35×19): the point is filter/codec coverage per row, not pixel
+    * volume. */
   def synthPngs(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     spread(docs).select(col("doc_id")).as[Long].mapPartitions { ids =>
@@ -2109,7 +1596,7 @@ object Media {
 
   /** Full pixel decode over a (media_id, content) frame: partition-local
     * mapPartitions (same shape as `extractFeatures`), REAL
-    * inflate+unfilter via `PngCodec`. Undecodable payloads map to
+    * decode via `PngCodec`. Undecodable payloads map to
     * (-1, -1, -1.0) — corrupt media is data, not an error. */
   def decodePngs(media: DataFrame): Dataset[PngStats] = {
     import media.sparkSession.implicits._

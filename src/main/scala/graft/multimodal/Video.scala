@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions._
   * The reference treats media as opaque payloads; the multimodal mandate
   * asks for frame sampling over video. This closes the last modality gap
   * honestly: a standards-shaped RIFF/AVI container walk (`LIST hdrl` →
-  * `avih`, `LIST movi` → `00dc` chunks) composed with the repo's own
-  * baseline JPEG codec ([[Media.JpegCodec]]) — every sampled frame runs
-  * the full Huffman+IDCT inverse pipeline. No native library, no stub.
+  * `avih`, `LIST movi` → `00dc` chunks) composed with the baseline
+  * JPEG codec ([[Media.JpegCodec]], the JDK's ImageIO reader) — every
+  * sampled frame runs the full Huffman+IDCT inverse pipeline. No stub.
   *
   * Scale posture: identical to the other codecs — partition-local
   * `mapPartitions`, blobs never shuffle, per-row work bounded by

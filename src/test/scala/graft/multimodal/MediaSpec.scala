@@ -294,6 +294,16 @@ class MediaSpec extends SparkSpec {
     assert(first.pixels.toSeq === frames(0).pixels.toSeq)
   }
 
+  test("decode caps: header size over MaxDecodedBytes, frame walk stops at maxFrames") {
+    // a VALID 4097×4096 gray PNG, 4 KiB over the cap: only the header
+    // check before the pixel read turns it away
+    assert(4097L * 4096 > Media.MaxDecodedBytes)
+    val big = Media.PngCodec.encodeStoredGray(4097, 4096, (_, _) => 0)
+    assert(Media.PngCodec.decode(big).isEmpty, "over-cap PNG must not decode")
+    val anim = Media.GifCodec.encodeGrayAnimated(6, 4, 3, (f, x, y) => 10 * f + x + y)
+    assert(Media.GifCodec.decodeFrames(anim, maxFrames = 2).map(_.length) === Some(2))
+  }
+
   test("media from documents round-trips through parquet (binary column)") {
     val dir = tempDir("media-parquet")
     val media = Media.fromDocuments(graft.core.Tables.load(spark, sf0001, "documents"))
